@@ -1,12 +1,12 @@
-"""Driver contract for the spark-graft builder (PySpark target).
+"""Entry-point contract of the spark-graft engine (PySpark target).
 
-The driver's verify runs ``entry(spark)`` as a smoke check, runs
-each ``queries()[name]`` at sf=0.01 and compares it against the
-matching ``oracle_sql()[name]`` via DuckDB (row-count + schema +
-order-insensitive value-hash → CORRECTNESS_r{N}.json).
+A caller runs ``entry(spark)`` as a smoke check, runs each
+``queries()[name]`` at some scale factor and compares it against the
+matching ``oracle_sql()[name]`` via DuckDB (row count + schema +
+order-insensitive value hash). Both maps are in registration order.
 
 Implementation lives in ``map_reduce_mongodb_spark``; this module is
-the thin adapter the driver imports.
+the thin adapter callers import.
 """
 
 from __future__ import annotations

@@ -4,8 +4,8 @@ Several operators legitimately ``persist()`` a mid-plan DataFrame (LSH
 signatures consumed by both sides of a self-join, shingle arrays read
 by banding AND verification) — recomputing those per consumer is the
 wrong trade at corpus scale. But a long-lived session sweeping all ~58
-registered queries (bench.py, the grading driver) would otherwise
-accumulate every query's caches and lean on LRU eviction.
+registered queries (a registry sweep, a perfbench run) would
+otherwise accumulate every query's caches and lean on LRU eviction.
 
 Contract: operators call :func:`tracked_persist` instead of
 ``DataFrame.persist``; every registered query builder releases the
@@ -24,8 +24,8 @@ boundaries per branch and can diverge under load (the r6
 stale consumer fails loudly rather than silently recomputing wrong.
 Checkpoint-backed results (:func:`track_rdd` /
 :func:`eager_checkpoint`) must therefore be consumed before the next
-registered query is built (true of every driver/bench/test flow here,
-which collect each query before building the next).
+registered query is built (true of every entry-point, perfbench and
+test flow here, which collect each query before building the next).
 """
 
 from __future__ import annotations
@@ -44,15 +44,13 @@ _LIVE_RDDS: list = []  # py4j handles of localCheckpoint-persisted RDDs
 # -- shared materializations (cross-query, process-scoped) -------------
 _SHARED: dict[str, str] = {}   # key -> parquet path
 _SHARED_DIR: str | None = None
-# key -> wall seconds spent materializing it (first build only).
-# bench.py reads this to attribute family build cost to the shared
-# artifact instead of smearing it into whichever consumer ran first.
+# key -> wall seconds spent materializing it (first build only), so
+# family build cost is attributed to the shared artifact instead of
+# being smeared into whichever consumer ran first.
 _BUILD_SECONDS: dict[str, float] = {}
 # Stack of shared-build keys currently being materialized, so nested
 # operators (connected_components' round count, k-core's peel depth)
-# can attribute scalar metrics to the build that ran them — regressions
-# in iterative builds become attributable in BENCH artifacts instead of
-# reading as anonymous slowdowns (VERDICT r6 #3).
+# can attribute scalar metrics to the build that ran them.
 _CURRENT_BUILD: list[str] = []
 _BUILD_METRICS: dict[str, dict[str, object]] = {}
 
@@ -139,39 +137,12 @@ def shared_value(key: str, build: Callable[[], object]) -> object:
 _SHARED_VALUES: dict[str, object] = {}
 
 
-class consumer_scope:
-    """Attribute build metrics noted OUTSIDE a shared-build
-    materialization (an iterative operator running inline in a query —
-    e.g. the k-core peel's round counts) to the named consumer instead
-    of the ``_unattributed`` bucket. bench.py wraps each timed query in
-    this scope so ``shared_build_metrics`` regressions name the query
-    they belong to. Shared builds still win: a build materializing
-    inside the scope attributes to its own key, as before."""
-
-    def __init__(self, name: str):
-        self._name = name
-
-    def __enter__(self):
-        _CURRENT_CONSUMER.append(self._name)
-        return self
-
-    def __exit__(self, *exc):
-        _CURRENT_CONSUMER.pop()
-        return False
-
-
-_CURRENT_CONSUMER: list[str] = []
-
-
 def note_build_metric(name: str, value) -> None:
     """Attach a scalar metric (e.g. an iterative operator's round
-    count) to the shared build currently materializing — else to the
-    enclosing :class:`consumer_scope`'s query — else to the
+    count) to the shared build currently materializing, else to the
     ``_unattributed`` bucket. Repeated notes under the same key
     accumulate into a list so multi-invocation builds stay visible."""
-    key = (_CURRENT_BUILD[-1] if _CURRENT_BUILD
-           else _CURRENT_CONSUMER[-1] if _CURRENT_CONSUMER
-           else "_unattributed")
+    key = _CURRENT_BUILD[-1] if _CURRENT_BUILD else "_unattributed"
     slot = _BUILD_METRICS.setdefault(key, {})
     if name in slot:
         prev = slot[name]
@@ -182,7 +153,7 @@ def note_build_metric(name: str, value) -> None:
 
 def shared_build_metrics() -> dict[str, dict[str, object]]:
     """Per-build-key metrics noted during materialization (round
-    counts etc.); bench.py emits this beside shared_builds."""
+    counts etc.), as a copy."""
     return {k: dict(v) for k, v in _BUILD_METRICS.items()}
 
 
@@ -195,15 +166,11 @@ def shared_build_seconds() -> dict[str, float]:
 def forget_shared_artifacts() -> None:
     """Drop the shared-materialization memos (parquet paths AND
     driver-side trained values) WITHOUT resetting the build-seconds /
-    metrics attribution. bench.py's COLD retry pass (VERDICT r12 #1)
-    calls this before every second attempt so the retry re-pays any
-    shared build its first attempt paid: previously a retried
-    first-payer query re-read the already-materialized artifact and
-    collapsed to near-zero (scd2_events_replay 3.306 s → 0.095 s in
-    BENCH_r12), letting min(t1, t2) delete real first-payer work from
-    the retry-adjusted totals instead of just load noise. The sweep's
-    attribution stays intact — the caller snapshots it before the
-    retry pass, and rebuilds during retries are expected."""
+    metrics attribution, so the next consumer re-pays every shared
+    build. A caller timing repeated cold runs (perfbench drops the
+    artifacts before every job) calls this between runs and reads the
+    attribution of the run before it first: a rebuild overwrites its
+    key's build seconds and appends to its metrics."""
     _SHARED.clear()
     _SHARED_VALUES.clear()
 

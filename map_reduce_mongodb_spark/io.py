@@ -184,12 +184,15 @@ def table(spark: SparkSession, name: str, sf_dir: str | None = None) -> DataFram
                     f"timestampadd(MICROSECOND, {c} DIV 1000, "
                     f"TIMESTAMP_NTZ '1970-01-01 00:00:00')"))
         if key is not None:
-            # Evict superseded stat-keys for the same (session, path)
-            # so in-place rewrites don't accumulate dead entries for
-            # the process lifetime (ADVICE r12 — each entry pins its
-            # JVM session via the py4j reference).
+            # Evict every entry for the same (application, path) whose
+            # stat differs, under ANY wrapper token: after an in-place
+            # rewrite those plans are dead for every session, and each
+            # would otherwise pin its JVM session via the py4j
+            # reference for the process lifetime. Same-stat entries of
+            # other tokens stay live.
             stale = [k for k in _SCAN_CACHE
-                     if k[:3] == key[:3] and k != key]
+                     if k[0] == key[0] and k[2] == key[2]
+                     and k[3:] != key[3:]]
             for k in stale:
                 del _SCAN_CACHE[k]
             _SCAN_CACHE[key] = df

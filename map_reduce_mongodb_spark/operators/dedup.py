@@ -336,7 +336,6 @@ def containment_pairs(df: DataFrame, text_col: str = "text",
                       word_shingles(F.col(text_col), shingle_n)
                       .alias("sh"))
             .filter(F.size("sh") > 0))
-    sizes = base.select(F.col(id_col), F.size("sh").alias("sz"))
     tokens = base.select(F.col(id_col), F.explode("sh").alias("g"))
     if max_shingle_df is not None:
         hot = (tokens.groupBy("g")
@@ -354,6 +353,7 @@ def containment_pairs(df: DataFrame, text_col: str = "text",
                  .filter(F.col("id_a") < F.col("id_b"))
                  .groupBy("id_a", "id_b")
                  .agg(F.count(F.lit(1)).alias("i")))
+        sizes = base.select(F.col(id_col), F.size("sh").alias("sz"))
         sz_a = sizes.select(F.col(id_col).alias("id_a"),
                             F.col("sz").alias("sa"))
         sz_b = sizes.select(F.col(id_col).alias("id_b"),

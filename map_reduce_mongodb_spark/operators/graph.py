@@ -147,8 +147,7 @@ def cluster_assignments(labels: DataFrame,
 
 
 def connected_components(edges: DataFrame, src: str = "src",
-                         dst: str = "dst", max_iter: int = 25,
-                         checkpoint_input: bool = True) -> DataFrame:
+                         dst: str = "dst", max_iter: int = 25) -> DataFrame:
     """Label every node of the undirected graph `edges` with the
     minimum node id of its connected component.
 
@@ -158,20 +157,9 @@ def connected_components(edges: DataFrame, src: str = "src",
     nodes never appear in an edge list; callers union them back with
     cc = id if needed).
 
-    ``checkpoint_input`` (r13): False skips the eager input checkpoint
-    — round 1 then re-evaluates the input expression per symmetrize
-    union branch (4 evaluations), and convergence starts with no input
-    checksum (costing one extra node-scaled confirming round only for
-    inputs that are already a fixpoint star). Measured (r13
-    interleaved A/B at sf0.1, 3 reps): skipping saves exactly one
-    blocking job per invocation but is wall-NEUTRAL-to-slightly-worse
-    even for shared-parquet leaf inputs (4 runtime re-scans cost more
-    than the one materialization job; for inputs carrying joins or a
-    distinct — dbscan's semi-joined core graph, the threshold sweep's
-    contracted deltas — it is ~0.3-1 s WORSE). Every current caller
-    therefore keeps the default True; the knob exists for callers
-    whose input is so cheap AND whose job-count budget is so tight
-    that the trade flips."""
+    The input is checkpointed eagerly before round 1, so the four
+    symmetrize union branches read one materialization and convergence
+    starts from the input's checksum."""
     from map_reduce_mongodb_spark.cache import note_build_metric, track_rdd
 
     # No ``.distinct()`` on the input (r12): the star rounds are
@@ -184,10 +172,7 @@ def connected_components(edges: DataFrame, src: str = "src",
     # multiset with a fixpoint (the count component differs).
     e = (edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
               .where(F.col(src) != F.col(dst)))
-    if checkpoint_input:
-        e, handles, prev = _checkpoint_checksummed(e)
-    else:
-        handles, prev = [], None
+    e, handles, prev = _checkpoint_checksummed(e)
     rounds = 0
     for _ in range(max_iter):
         nxt, nxt_handles, cur = _checkpoint_checksummed(
@@ -216,19 +201,6 @@ def connected_components(edges: DataFrame, src: str = "src",
                                F.col("dst").alias("cc")))
                .groupBy("id").agg(F.min("cc").alias("cc")))
     return labels
-
-
-def dedup_clusters(pairs: DataFrame, id_a: str = "id_a",
-                   id_b: str = "id_b") -> DataFrame:
-    """Near-dup pair list → cluster assignment ``(doc_id, cluster_id,
-    cluster_size)``; cluster_id = min doc_id of the component — the
-    canonical survivor a keep-one-per-cluster dedup would retain."""
-    labels = connected_components(pairs, src=id_a, dst=id_b)
-    sizes = labels.groupBy("cc").agg(F.count(F.lit(1)).alias("cluster_size"))
-    return (labels.join(sizes, "cc")
-                  .select(F.col("id").alias("doc_id"),
-                          F.col("cc").alias("cluster_id"),
-                          F.col("cluster_size")))
 
 
 def k_core(pairs: DataFrame, k: int, id_a: str = "id_a",

@@ -12368,210 +12368,10 @@ def q_benford_first_digit(spark: SparkSession, sf_dir: str
         .alias("chi2"))
 
 
-# =====================================================================
-# Driver CORRECTNESS-window rotation (artifact-driven)
-# =====================================================================
-# The grading driver records at most the FIRST ``_DRIVER_WINDOW``
-# entries of ``queries()`` in CORRECTNESS_r{N}.json (observed cap in
-# r01-r05, dict insertion order), so registration ORDER is part of the
-# verification surface. With 259 registered queries, plain source
-# order would leave most of the registry permanently outside the
-# driver's own artifact.
-#
-# Instead of a hand-maintained priority list (which went stale the
-# moment CORRECTNESS_r05.json landed — VERDICT r5 defect #1), the
-# window is now COMPUTED from the committed artifacts at import time:
-#
-#   1. queries with NO row in any committed CORRECTNESS_r*.json,
-#      oracle-checked ones first (full rows+schema+hash evidence per
-#      slot), in registration order — a first driver check beats any
-#      re-check;
-#   2. never-checked rows-only queries (weaker rows+schema evidence,
-#      so they queue behind the oracled backlog — VERDICT r5 #6);
-#   3. ``_REWIRED``: already-green queries whose shared infrastructure
-#      changed since their newest row (maintained by hand per round —
-#      VERDICT r5 #3 names the r5 cache/checkpoint-rework consumers);
-#   4. everything else, oldest evidence first (stable by registration
-#      order within an evidence round), so every query cycles back
-#      through the window over rounds and a regression anywhere is
-#      caught within a few rounds rather than never.
-#
-# This ordering makes tests/test_registry.py's invariant ("no
-# already-green query occupies a window slot while a never-checked one
-# waits outside") hold BY CONSTRUCTION after every round: when a new
-# CORRECTNESS artifact is committed, the next import re-derives the
-# tiers from it. Pure ordering work — no query semantics change.
-_DRIVER_WINDOW = 50
-
-# Already-green queries needing fresh evidence because code they
-# depend on changed since their newest row: name -> minimum round
-# whose evidence counts (an entry expires automatically once a
-# CORRECTNESS_r{>=round}.json row lands, so it stops holding a window
-# slot). r6 entries: consumers of _jaccard_pairs_07 /
-# _md5_minhash_index / cache.py release logic reworked in r5
-# (VERDICT r5 directive #3) — newest rows all r2-era.
-_REWIRED: dict[str, int] = {
-    # r6 sf0.1 parity sweep fixes: round() half-ulp divergences made
-    # bit-exact (exact-cents avg / unrounded exact-operand division)
-    # — outputs changed, so the old green rows no longer describe
-    # the current code.
-    "q2_min_cost_supplier": 7, "events_sliding_window": 7,
-    # distributed_cumsum/_cummax _pid-desync fix (prefix.py now
-    # persists the ranged frame — the old plan could return corrupted
-    # ranks under concurrent load): every evidenced consumer of the
-    # operator re-evidences on the fixed plan.
-    "orders_rfm": 7, "seq_packing": 7, "weighted_sample": 7,
-    "orders_running_quantile": 7, "equidepth_histogram": 7,
-    "revenue_gini": 7, "pareto_revenue_abc": 7,
-    "sorted_neighborhood_pairs": 7, "skyline_parts": 7,
-    # r8 reworks (VERDICT r7 #1-2, ADVICE r7): the threshold sweep
-    # moved to supernode-contraction CC reuse, the CF twins onto the
-    # ONE shared purchase-matrix build, the event-time lane onto
-    # zone-free epoch_us_ntz (same values under UTC; different
-    # physical expression), and the ivf_kmeans gate onto probe_all
-    # derived from the shared index. (dup_graph_threshold_sweep was
-    # rewired here too; its live entry is the r9 one below — Python
-    # keeps the LAST duplicate key, so don't re-add an 8 entry.)
-    "supplier_cf_similarity": 8, "supplier_cf_similarity_capped": 8,
-    "events_interarrival": 8, "events_time_weighted_avg": 8,
-    "funnel_time_to_convert": 8, "events_range_frame": 8,
-    "event_gap_p90": 8, "ivf_kmeans_probe_all": 8,
-    # r8 TZ=America/Sao_Paulo sweep: inflight_sweepline's DATE→LTZ
-    # output cast shifted +1h on Brazil's midnight spring-forwards
-    # (1995-10-15, 1996-10-06) — a REAL wrong answer in a bare
-    # non-UTC session. Fixed to timestamp_ntz there and at every
-    # other output-visible DATE/NTZ→LTZ cast of the same class
-    # (identical values under UTC; different physical expression).
-    "inflight_sweepline": 8, "date_functions": 8,
-    "lineitem_yoy_growth": 8, "user_retention_weekly": 8,
-    # r8: containment twins moved onto the ONE shared shingle-set
-    # build (_containment_base — the CF-matrix treatment).
-    # r8 union→explode plan fixes (a union re-executes each branch's
-    # subtree): triangle corners now emitted from ONE evaluation of
-    # the wedge join (CF twins got the same fix for their dots
-    # symmetrization — already flagged above); word_cooc_lift's two
-    # window distances now explode from one concat instead of
-    # scanning+tokenizing the corpus per distance.
-    # r9: the registry-wide union-duplication sweep (VERDICT r8 #3)
-    # found the last two silent-recompute sites — per-level label
-    # composition in cc_threshold_sweep and dbscan's reused
-    # core/ccall tables — now eagerly checkpointed (identical
-    # values; different physical plan).
-    "dbscan_embeddings": 9,
-    # r9 operator review (same values; different physical plan):
-    # the shared shingle base in the inverted-index dedup operators
-    # is now persisted (was re-derived 4x per query), minhash verify
-    # folded into _verify_jaccard (sizes-minus-inter union formula —
-    # equal on distinct shingle sets), asof_join gained the
-    # payload-struct tiebreak for duplicate right timestamps, and the
-    # counters fast path coalesces all-missing fields to 0.
-    "ngram_jaccard_pairs_fast": 9,
-    "minhash_dedup_pairs": 9, "asof_join_purchases": 9,
-    # r9 queries.py review: the activity bitmap gained the explicit
-    # di∈[0,63] window on BOTH sides (Spark shiftleft wraps mod 64,
-    # DuckDB << does not — out-of-window events now excluded, not
-    # wrapped), assortativity's n_nodes became a lazy broadcast
-    # aggregate (was an eager driver count), and set_except moved to
-    # subtract() (EXCEPT-distinct in one operator).
-    "user_activity_bitmap": 9, "set_except": 9,
-    # r9 randomized-data sweep (tools/gen_random_corpus.py — same
-    # schemas, different seed + in-domain edge injections): zero-token
-    # docs hit an ANSI DIVIDE_BY_ZERO (now a NULL-guarded divisor) and
-    # single-token docs rendered entropy as -0.0 in DuckDB vs 0.0 in
-    # Spark (now +0.0-normalized on both sides). Identical values on
-    # the fixtures; different physical expressions. mmr_rerank: same
-    # -0.0 class via round(tiny-negative score) when a candidate
-    # duplicates a selected vector. (token_count_bpe's r9 entry was
-    # superseded by its r10 one below — literal uniqueness enforced
-    # by test_rewired_literal_has_no_duplicate_keys.)
-    "mmr_rerank": 9,
-    # r10 advisor fixes (ADVICE r9): token_count_bpe's whitespace
-    # class spelled explicitly ([ \t\n\x0B\f\r]) on both engines —
-    # Java \s includes U+000B, RE2 \s does not. Identical values on
-    # every committed corpus (none contain \x0B); different physical
-    # expression.
-    "token_count_bpe": 10,
-    # r10 row-group-layout sweep: the TPC-H money family's product
-    # sums moved from double to DECIMAL — a double sum's last ulp
-    # depends on partial-agg merge order, and the product grid is
-    # 4-decimal so the TRUE sum sits exactly on a half-cent rounding
-    # boundary with ~1% probability per output value (q1's sum_charge
-    # actually flipped with multi-row-group input; the others share
-    # the arithmetic and passed by merge-order luck). Identical
-    # values on the single-row-group fixtures; order-independent
-    # aggregation arithmetic everywhere (_REV_DEC_SQL).
-    "q1_pricing_summary": 10, "multiway_join": 10,
-    "q3_shipping_priority": 10, "q5_local_supplier_volume": 10,
-    "q6_forecast_revenue": 10, "q7_volume_shipping": 10,
-    "q8_market_share": 10, "q9_product_type_profit": 10,
-    "q10_returned_items": 10, "q14_promo_revenue": 10,
-    "q15_top_supplier": 10, "q19_discounted_revenue": 10,
-    # r11 multimodal unicode decoupling (VERDICT r10 #5): payloads
-    # now derive from md5(text) hex instead of the text bytes
-    # (operators/multimodal.py::_payload_source), so OUTPUT VALUES
-    # changed for the whole media family — every member re-evidences.
-    "multimodal_inventory": 11, "multimodal_decode_stats": 11,
-    "video_frame_stats": 11, "image_thumbnails": 11,
-    "audio_features": 11, "image_ahash": 11, "audio_fingerprint": 11,
-    "video_frame_ahash": 11, "video_shot_boundaries": 11,
-    "audio_silence_runs": 11,
-    # r11 scd2_apply defensive duplicate-key compact (VERDICT r10
-    # #6): a max-struct groupBy now precedes the broadcast (identical
-    # values for in-contract single-row-per-key batches; different
-    # physical plan).
-    "scd2_customer_update": 11, "scd2_events_replay": 11,
-    "scd2_snapshot_diff": 11,
-    # r11 whitespace-class sweep (ADVICE r10 generalized): EVERY
-    # \s-splitting site — Spark and oracle — now spells the class
-    # explicitly ([ \t\n\x0B\f\r]), the token_count_bpe treatment
-    # applied engine-portably across the registry. Java \s IS that
-    # class, so Spark values are unchanged; RE2 \s lacks U+000B, so
-    # oracles change only on corpora containing it (none committed;
-    # the corpus contract banned it). Identical values everywhere
-    # committed; different physical expressions on both engines.
-    "bigram_lm_logprob": 11, "bm25_search": 11,
-    "bpe_merge_candidates": 11, "cdc_chunks": 11,
-    "containment_pairs": 11, "containment_pairs_capped": 11,
-    "corpus_curation": 11, "cross_source_dup_matrix": 11,
-    "decontaminate_train": 11, "dedup_clusters": 11,
-    "dedup_exact_groups": 11, "dedup_rate_by_source": 11,
-    "dedup_survivors": 11, "dedup_token_savings": 11,
-    "doc_ngram_novelty": 11, "doc_quality": 11, "doc_repetition": 11,
-    "doc_text_stats": 11, "doc_token_entropy": 11,
-    "dup_graph_assortativity": 11, "dup_graph_bfs": 11,
-    "dup_graph_degree_hist": 11, "dup_graph_local_clustering": 11,
-    "dup_graph_pagerank": 11, "dup_graph_ppr": 11,
-    "dup_graph_stats": 11, "dup_graph_threshold_sweep": 11,
-    "dup_passages": 11, "dup_provenance": 11,
-    "dup_shared_token_runs": 11, "heavy_hitters_mg": 11,
-    "hybrid_search": 11, "incremental_dedup_pairs": 11,
-    "jaccard_prefix_pairs": 11, "label_propagation": 11,
-    "lang_doclen_deciles": 11, "lang_id": 11, "lang_id_confusion": 11,
-    "lang_median_doclen": 11, "lang_token_fertility": 11,
-    "mapreduce_wordcount": 11, "minhash_estimate_accuracy": 11,
-    "minhash_lsh_md5": 11, "negative_sampling_table": 11,
-    "ngram_jaccard_pairs": 11, "quality_percentile_filter": 11,
-    "rrf_fusion": 11, "simhash_fingerprints": 11, "simhash_pairs": 11,
-    "source_vocab_overlap": 11, "tfidf_top_terms": 11,
-    "top_bigrams": 11, "unigram_logprob": 11, "vocab_coverage": 11,
-    "vocab_growth_heaps": 11, "winnow_dup_pairs": 11,
-    "winnow_fingerprints": 11, "word_cooc_lift": 11,
-    # r11 sf≈1 scale-probe fixes (identical values, different plans):
-    # the PCA lane's distributed accumulation moved from y^T y to the
-    # raw second moment (int64 headroom n·mx² instead of 4n³·mx² —
-    # the probe's 10× embeddings table tripped the old guard), and
-    # the stream-stream join's equality key gained a 30-min time
-    # bucket (hot-key state probes were quadratic in the key's
-    # buffered history: 1460 s at 1M events, now ~20 s).
-    "embedding_pca_power_iteration": 11, "embedding_pc1_projection": 11,
-    "embedding_pca_second_component": 11,
-    "embedding_pca_scatter_bins": 11, "stream_stream_join": 11,
-}
-
 # Every rows-only (no-oracle) query names the oracle-checked twin (or
-# pinning test) that proves its machinery exact, so a ``no_oracle``
-# row in a CORRECTNESS artifact is never mistaken for a failure
-# (VERDICT r5 directive #5). Checked by tests/test_registry.py.
+# pinning test) that proves its machinery exact, so a query without an
+# oracle of its own still traces to hash-checked evidence. Checked by
+# tests/test_registry.py.
 ROWS_ONLY_GATES: dict[str, str] = {
     # md5 pipelines are the hash-checked twins of the xxhash64 lanes
     "winnow_fingerprints_fast": "winnow_fingerprints",
@@ -12591,82 +12391,3 @@ ROWS_ONLY_GATES: dict[str, str] = {
     # data-dependent fixpoint: pinned against a pure-Python peel
     "dup_graph_kcore": "tests/test_graph.py::test_k_core_matches_exact_python_peel",
 }
-
-
-def _row_is_green(row) -> bool:
-    """A driver artifact row counts as green when it is a full
-    rows+schema+hash pass, or the by-design rows-only outcome
-    (``err: no_oracle`` with a row count — the weaker evidence those
-    queries can ever produce; their exactness lives in
-    ``ROWS_ONLY_GATES``). Anything else — a real error payload or any
-    False match flag — is a FAILURE the rotation must re-check."""
-    if not isinstance(row, dict):
-        return True  # unknown artifact shape: don't spin on it
-    if row.get("err") == "no_oracle":
-        return row.get("spark_rows") is not None
-    return (row.get("err") in (None, "") and bool(row.get("rows_match"))
-            and bool(row.get("schema_match"))
-            and bool(row.get("hash_match")))
-
-
-def _evidence_rounds() -> tuple[dict[str, int], set[str]]:
-    """(newest, red): newest committed CORRECTNESS round carrying a
-    row for each query name ({} when no artifacts exist, e.g. a fresh
-    checkout), and the queries whose NEWEST row is non-green — a
-    known-failing query must re-enter the window next round, not
-    rotate to the back as if freshly verified (ADVICE r6)."""
-    import json
-    import re as _re
-    from pathlib import Path
-
-    newest: dict[str, int] = {}
-    latest_row: dict[str, object] = {}
-    root = Path(__file__).resolve().parent.parent
-    for f in sorted(root.glob("CORRECTNESS_r*.json")):
-        m = _re.search(r"r(\d+)", f.name)
-        if m is None:
-            continue
-        try:
-            rows = json.loads(f.read_text())
-        except (OSError, ValueError):
-            continue
-        rnd = int(m.group(1))
-        for n, payload in rows.items():
-            if rnd >= newest.get(n, 0):
-                newest[n] = max(newest.get(n, 0), rnd)
-                latest_row[n] = payload
-    red = {n for n, row in latest_row.items() if not _row_is_green(row)}
-    return newest, red
-
-
-def _curated_order() -> list[str]:
-    base = list(QUERIES)
-    pos = {n: i for i, n in enumerate(base)}
-    newest, red = _evidence_rounds()
-    never = [n for n in base if n not in newest]
-    tier1 = [n for n in never if n in ORACLE_SQL]
-    tier2 = [n for n in never if n not in ORACLE_SQL]
-    # tier 3: needs fresh evidence NOW — hand-flagged rewires plus any
-    # query whose newest driver row is red (a failure auto-re-enters
-    # the window; before r7 it silently rotated to the back of tier 4).
-    tier3 = [n for n in base
-             if (n in _REWIRED and n in newest and newest[n] < _REWIRED[n])
-             or (n in red and n in newest)]
-    seen = set(tier1) | set(tier2) | set(tier3)
-    tier4 = sorted((n for n in base if n in newest and n not in seen),
-                   key=lambda n: (newest[n], pos[n]))
-    return tier1 + tier2 + tier3 + tier4
-
-
-def _curate_registration_order() -> None:
-    """Rebuild QUERIES/ORACLE_SQL in curated order (in place, so
-    modules holding a reference to the dicts see the new order)."""
-    ordered = _curated_order()
-    for registry in (QUERIES, ORACLE_SQL):
-        snapshot = dict(registry)
-        registry.clear()
-        registry.update(
-            {n: snapshot[n] for n in ordered if n in snapshot})
-
-
-_curate_registration_order()

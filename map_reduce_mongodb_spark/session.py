@@ -42,11 +42,11 @@ _LOCAL_DEFAULTS: dict[str, str] = {
     "spark.sql.legacy.parquet.nanosAsLong": "true",
     "spark.sql.autoBroadcastJoinThreshold": str(64 * 1024 * 1024),
     "spark.sql.session.timeZone": "UTC",
-    # Keep the UI off in tests/bench: saves startup time and ports.
+    # Keep the UI off in tests and benchmarks: saves startup time and ports.
     "spark.ui.enabled": "false",
     # No console progress bars: they interleave with (and in captured
-    # harnesses can truncate away) the one-line JSON summaries that
-    # bench.py / the grading driver parse from process output.
+    # output can truncate away) the one-line JSON summaries that the
+    # CLI and perfbench/run.py print as their last stdout line.
     "spark.ui.showConsoleProgress": "false",
     # Metastore artifacts (bucketed-table demos) stay out of the repo.
     "spark.sql.warehouse.dir": "/tmp/spark-warehouse",

@@ -1,6 +1,6 @@
 """Connected-components operator (operators/graph.py): equivalence to
 a driver-side union-find on random graphs, worst-case chain diameters,
-degenerate inputs, and dedup_clusters contract."""
+degenerate inputs, and the cluster-assignment contract."""
 
 from __future__ import annotations
 
@@ -10,7 +10,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from map_reduce_mongodb_spark.operators.graph import (
-    connected_components, dedup_clusters)
+    cluster_assignments, connected_components)
 
 
 def _union_find(n_nodes, edges):
@@ -86,7 +86,8 @@ def test_dedup_clusters_sizes(spark):
     pairs = spark.createDataFrame(
         [(1, 2), (2, 3), (7, 8)], "id_a: long, id_b: long")
     rows = {r["doc_id"]: (r["cluster_id"], r["cluster_size"])
-            for r in dedup_clusters(pairs).collect()}
+            for r in cluster_assignments(connected_components(
+                pairs, src="id_a", dst="id_b")).collect()}
     assert rows == {1: (1, 3), 2: (1, 3), 3: (1, 3), 7: (7, 2), 8: (7, 2)}
 
 
@@ -205,8 +206,7 @@ def test_iteration_round_counts_are_recorded(spark):
     """connected_components / k_core note their round counts into the
     cache module's build metrics (attributed to the enclosing shared
     build, or _unattributed outside one) — iterative-build regressions
-    must be attributable in BENCH artifacts, not anonymous slowdowns
-    (VERDICT r6 #3)."""
+    must be attributable in traces, not anonymous slowdowns."""
     from map_reduce_mongodb_spark import cache
     from map_reduce_mongodb_spark.operators.graph import k_core
 
@@ -225,18 +225,6 @@ def test_iteration_round_counts_are_recorded(spark):
         k=2).collect()
     got = cache.shared_build_metrics().get("_unattributed", {})
     assert "kcore_rounds" in got, got
-
-    # consumer_scope: the same inline metric attributes to the named
-    # query when the caller (bench.py's timed loop) opens a scope —
-    # iterative-round regressions name the query they belong to.
-    cache._BUILD_METRICS.clear()
-    with cache.consumer_scope("dup_graph_kcore"):
-        k_core(spark.createDataFrame(
-            [(1, 2), (2, 3), (3, 1)], "id_a: long, id_b: long"),
-            k=2).collect()
-    got = cache.shared_build_metrics()
-    assert "kcore_rounds" in got.get("dup_graph_kcore", {}), got
-    assert "kcore_rounds" not in got.get("_unattributed", {}), got
 
     # attribution: a metric noted during a shared_parquet build lands
     # under that build's key

@@ -1,7 +1,8 @@
 """Scan-plan memo (io._SCAN_CACHE, r12): the cached object is a lazy
-plan keyed per (session, path, stat) — these pin the three contract
-points: hit on repeat, session isolation (the sql_surface_cte_exists
-regression), and stat-keyed invalidation on rewrite."""
+plan keyed per (session, path, stat) — these pin the contract points:
+hit on repeat, session isolation (the sql_surface_cte_exists
+regression), stat-keyed invalidation on rewrite, and eviction of the
+rewritten file's dead entries under every session."""
 
 from __future__ import annotations
 
@@ -9,7 +10,7 @@ import shutil
 
 from pyspark.sql import functions as F
 
-from map_reduce_mongodb_spark.io import table
+from map_reduce_mongodb_spark.io import _SCAN_CACHE, table
 from tests.conftest import SF_DIR
 
 
@@ -49,3 +50,22 @@ def test_rewritten_file_invalidates_entry(spark, tmp_path):
     after = table(spark, "region", str(tmp_path))
     assert after is not before
     assert after.count() == 2 < n_before
+
+
+def test_rewrite_evicts_stale_entries_of_every_session(spark, tmp_path):
+    """A rewrite read back through ANOTHER session wrapper must still
+    evict the first wrapper's entry for the old file: that plan is
+    dead, and the entry would pin its session for the process
+    lifetime."""
+    path = tmp_path / "region.parquet"
+    shutil.copy(f"{SF_DIR}/region.parquet", path)
+    before = table(spark, "region", str(tmp_path))
+    old_stat = next(k[3:] for k in _SCAN_CACHE if k[2] == str(path))
+    sub = before.where(F.col("r_regionkey") < 2).toPandas()
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    pq.write_table(pa.Table.from_pandas(sub), path)
+    assert table(spark.newSession(), "region", str(tmp_path)).count() == 2
+    stale = [k for k in _SCAN_CACHE
+             if k[2] == str(path) and k[3:] == old_stat]
+    assert not stale, stale

@@ -7,11 +7,10 @@ the exact canonicalizer the test suite uses. Prints one status line
 per query and a final ``BAD=[...]`` summary line.
 
 Usage:
-    python tools/dress_rehearsal.py                 # first-50 window, sf0.01
-    python tools/dress_rehearsal.py --all           # whole registry
+    python tools/dress_rehearsal.py                 # whole registry, sf0.01
     python tools/dress_rehearsal.py --names a b c   # specific queries
     python tools/dress_rehearsal.py --sf-dir /root/testdata/sf0.001
-    python tools/dress_rehearsal.py --all --bare --corpus skew
+    python tools/dress_rehearsal.py --bare --corpus skew
 
 ``--corpus MODE`` (VERDICT r10 #7) folds the r9/r10 randomized-data
 axes into named one-flag modes instead of per-round ad-hoc scripts.
@@ -142,8 +141,6 @@ def build_corpus(mode: str, out: str) -> None:
 def main() -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("--sf-dir", default="/root/testdata/sf0.01")
-    ap.add_argument("--all", action="store_true",
-                    help="run every registered query, not just the window")
     ap.add_argument("--names", nargs="*", default=None)
     ap.add_argument("--bare", action="store_true",
                     help="plain SparkSession (no repo confs) — catches "
@@ -221,17 +218,11 @@ def main() -> int:
     import duckdb
 
     from map_reduce_mongodb_spark.io import TABLE_NAMES
-    from map_reduce_mongodb_spark.queries import (
-        ORACLE_SQL, QUERIES, _DRIVER_WINDOW)
+    from map_reduce_mongodb_spark.queries import ORACLE_SQL, QUERIES
     from map_reduce_mongodb_spark.session import get_spark
     from tests.conftest import canonical_rows
 
-    if args.names:
-        names = list(args.names)
-    elif args.all:
-        names = list(QUERIES)
-    else:
-        names = list(QUERIES)[:_DRIVER_WINDOW]
+    names = list(args.names) if args.names else list(QUERIES)
 
     def build_session():
         if args.bare:

@@ -46,7 +46,7 @@ normalized-hash dedup queries to mismatch BY CONTRACT there.
 
 Usage:
     python tools/gen_random_corpus.py --out /tmp/randsf --seed 7
-    python tools/dress_rehearsal.py --all --bare --sf-dir /tmp/randsf
+    python tools/dress_rehearsal.py --bare --sf-dir /tmp/randsf
 """
 
 from __future__ import annotations
