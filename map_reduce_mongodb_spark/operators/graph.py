@@ -17,10 +17,9 @@ Scale notes:
   materializes a giant array on one task; its edges stay distributed
   rows.
 - Iterative DataFrame loops grow lineage without bound; each round is
-  cut with ``localCheckpoint(eager=True)`` (executor-local blocks). On
-  a real cluster with lineage-failure concerns, swap for
-  ``spark.sparkContext.setCheckpointDir`` + ``checkpoint()`` — same
-  plan shape.
+  cut with ``cache.eager_checkpoint``: ``localCheckpoint(eager=True)``
+  (executor-local blocks), or a reliable ``checkpoint()`` — same plan
+  shape — once the session has ``setCheckpointDir`` configured.
 - Convergence is detected with a deterministic (count, xxhash64-xor)
   checksum of the edge set, OBSERVED during the checkpoint job itself
   (``DataFrame.observe`` + ``Observation``): one blocking job per
@@ -92,23 +91,15 @@ def _small_star(edges: DataFrame) -> DataFrame:
             .distinct())
 
 
-def _checkpoint(df: DataFrame):
-    """Back-compat delegate — the checkpoint/handle plumbing now lives
-    with the rest of the persistence hygiene in
-    ``cache.eager_checkpoint`` (prefix.py needs the same fail-loud
-    materialization)."""
-    from map_reduce_mongodb_spark.cache import eager_checkpoint
-    return eager_checkpoint(df)
-
-
 def _checkpoint_checksummed(edges: DataFrame):
     """Eager-checkpoint ``edges`` while OBSERVING its deterministic
     (count, xxhash64-xor) checksum inside the same job — bit_xor (not
     sum) of the row hashes is order-insensitive and free of ANSI
     long-overflow. Returns (checkpointed_df, rdd_handles, (n, h));
     the convergence test costs zero extra jobs."""
+    from map_reduce_mongodb_spark.cache import eager_checkpoint
     obs = Observation()
-    ck, handles = _checkpoint(edges.observe(
+    ck, handles = eager_checkpoint(edges.observe(
         obs,
         F.count(F.lit(1)).alias("n"),
         F.coalesce(F.bit_xor(F.xxhash64("src", "dst")),

@@ -139,13 +139,13 @@ def scd2_replay_stream(dim: DataFrame, update_batches: list[DataFrame],
     def upsert(batch_df: DataFrame, _epoch: int) -> None:
         if batch_df.isEmpty():
             return
-        from map_reduce_mongodb_spark.operators.graph import _checkpoint
+        from map_reduce_mongodb_spark.cache import eager_checkpoint
         cur = batch_df.sparkSession.read.parquet(dim_path)
         # checkpoint cuts lineage across the overwrite of dim_path; the
         # blocks are dead once the write lands — drop them at the RDD
         # level or every epoch leaks storage for the session's lifetime
-        merged, handles = _checkpoint(scd2_apply(cur, batch_df, key,
-                                                 attrs))
+        merged, handles = eager_checkpoint(scd2_apply(cur, batch_df, key,
+                                                      attrs))
         merged.write.mode("overwrite").parquet(dim_path)
         for h in handles:
             h.unpersist(False)

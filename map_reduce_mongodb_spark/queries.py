@@ -28,7 +28,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from map_reduce_mongodb_spark.cache import release_caches
+from map_reduce_mongodb_spark.cache import eager_checkpoint, release_caches
 from map_reduce_mongodb_spark.io import table
 from map_reduce_mongodb_spark.operators.graph import symmetrize
 from map_reduce_mongodb_spark.pipeline.usgs import usgs_flat_join
@@ -5437,7 +5437,6 @@ def q_dup_graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the previous round's (RDD-level release — DataFrame.unpersist
     # can't), the final round's go to the cache registry
     from map_reduce_mongodb_spark.cache import track_rdd
-    from map_reduce_mongodb_spark.operators.graph import _checkpoint
     handles: list = []
     for _ in range(5):
         contrib = (edges_deg
@@ -5445,7 +5444,7 @@ def q_dup_graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
                    .groupBy(F.col("id_b").alias("id"))
                    .agg(F.sum(F.col("r") / F.col("deg"))
                         .alias("contrib")))
-        ranks, nxt_handles = _checkpoint(
+        ranks, nxt_handles = eager_checkpoint(
             base.join(contrib, "id", "left")
             .select("id",
                     (F.col("base") + F.lit(0.85)
@@ -7096,7 +7095,6 @@ def q_dup_graph_bfs(spark: SparkSession, sf_dir: str) -> DataFrame:
     frontier, and 4 rounds is the fixed probe depth (not data-
     dependent)."""
     from map_reduce_mongodb_spark.cache import track_rdd
-    from map_reduce_mongodb_spark.operators.graph import _checkpoint
     pairs = _jaccard_pairs_07(spark, sf_dir).select("id_a", "id_b")
     sym = symmetrize(pairs)
     edges = sym.select(F.col("id_a").alias("src"),
@@ -7110,7 +7108,7 @@ def q_dup_graph_bfs(spark: SparkSession, sf_dir: str) -> DataFrame:
                               "src")
                    .select(F.col("dst").alias("id"),
                            (F.col("d") + 1).alias("d")))
-        dist, nxt = _checkpoint(
+        dist, nxt = eager_checkpoint(
             dist.unionByName(relaxed).groupBy("id")
             .agg(F.min("d").alias("d")))
         for h in handles:
@@ -7164,7 +7162,6 @@ def q_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     rounds; vote counts and tiebreaks are integer-exact so labels
     match exactly. Reads the shared 0.7-Jaccard pair table."""
     from map_reduce_mongodb_spark.cache import checkpoint_leaf, track_rdd
-    from map_reduce_mongodb_spark.operators.graph import _checkpoint
     pairs = _jaccard_pairs_07(spark, sf_dir).select("id_a", "id_b")
     sym = symmetrize(pairs)
     edges = sym.select(F.col("id_a").alias("src"),
@@ -7188,7 +7185,7 @@ def q_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
         w = Window.partitionBy("id").orderBy(F.desc("c"), F.asc("lbl"))
         win = (cnt.withColumn("rn", F.row_number().over(w))
                .filter(F.col("rn") == 1).select("id", "lbl"))
-        labels, nxt = _checkpoint(
+        labels, nxt = eager_checkpoint(
             seeds.unionByName(
                 win.join(seeds.select("id"), "id", "left_anti")))
         for h in handles:
@@ -8126,7 +8123,6 @@ def q_dup_graph_ppr(spark: SparkSession, sf_dir: str) -> DataFrame:
     identical 4 iterations, and 6dp rounding absorbs the ~1e-13
     cross-engine float drift (measured for the pagerank twin)."""
     from map_reduce_mongodb_spark.cache import track_rdd, tracked_persist
-    from map_reduce_mongodb_spark.operators.graph import _checkpoint
     pairs = _jaccard_pairs_07(spark, sf_dir).select("id_a", "id_b")
     sym = symmetrize(pairs)
     deg = sym.groupBy("id_a").agg(
@@ -8151,7 +8147,7 @@ def q_dup_graph_ppr(spark: SparkSession, sf_dir: str) -> DataFrame:
                    .groupBy(F.col("id_b").alias("id"))
                    .agg(F.sum(F.col("r") / F.col("deg"))
                         .alias("contrib")))
-        ranks, nxt = _checkpoint(
+        ranks, nxt = eager_checkpoint(
             base.join(contrib, "id", "left")
             .select("id",
                     (F.col("base") + F.lit(0.85)
@@ -8766,7 +8762,6 @@ def q_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     from map_reduce_mongodb_spark.cache import track_rdd
     from map_reduce_mongodb_spark.functions.vectors import (
         cosine_unrolled)
-    from map_reduce_mongodb_spark.operators.graph import _checkpoint
     from map_reduce_mongodb_spark.operators.similarity import (
         cosine_topk_bruteforce)
     pool, k = 8, 4
@@ -8779,7 +8774,7 @@ def q_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     # |Q|·pool-bounded tables — and each step's selection — keeps
     # every step's plan flat over tiny materialized inputs (~1 s).
     handles: list = []
-    cand, h = _checkpoint(
+    cand, h = eager_checkpoint(
         cosine_topk_bruteforce(emb, list(range(5)), k=pool)
         .select("query_id", "neighbor_id",
                 F.col("cosine").alias("rel")))
@@ -8791,7 +8786,7 @@ def q_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
                      F.col("embedding").alias("va"))
     b = candv.select("query_id", F.col("neighbor_id").alias("id_b"),
                      F.col("embedding").alias("vb"))
-    psim, h = _checkpoint(
+    psim, h = eager_checkpoint(
         a.join(b, "query_id")
         .where(F.col("id_a") != F.col("id_b"))
         .select("query_id", "id_a", "id_b",
@@ -8823,7 +8818,7 @@ def q_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .where(F.col("rn") == 1)
                 .select("query_id", "neighbor_id",
                         F.lit(t).alias("pick"), "score"))
-        sel, h = _checkpoint(sel.unionByName(pick))
+        sel, h = eager_checkpoint(sel.unionByName(pick))
         handles += h
     for h in handles:
         track_rdd(h)

@@ -13,6 +13,12 @@ same code ships unchanged to a 1000-executor cluster against ~100 TB:
 - ``spark.sql.shuffle.partitions`` defaults to a small local value but
   AQE's coalescing makes the number advisory; on a real cluster you set
   it (or leave AQE's initialPartitionNum) to ~2-3x total cores.
+- **Codegen cache sized to the working set.** A curation job is a chain
+  of small jobs whose generated classes outnumber Spark's default
+  100-entry codegen LRU, which then recompiles (Janino, then HotSpot)
+  nearly every class on every job. The cache holds every class a
+  session serving the perfbench workloads compiles, so a repeated plan
+  compiles once per session.
 """
 
 from __future__ import annotations
@@ -21,9 +27,10 @@ import os
 
 from pyspark.sql import SparkSession
 
-# Defaults appropriate for the driver's local[32] harness. On a real
-# cluster these are overridden by spark-submit conf; nothing here is
-# load-bearing for correctness.
+# Defaults for the local[N] sessions of perfbench and the tier-1 tests
+# (N = the cores the process may use). On a real cluster these are
+# overridden by spark-submit conf; nothing here is load-bearing for
+# correctness.
 _LOCAL_DEFAULTS: dict[str, str] = {
     "spark.sql.adaptive.enabled": "true",
     "spark.sql.adaptive.coalescePartitions.enabled": "true",
@@ -42,6 +49,16 @@ _LOCAL_DEFAULTS: dict[str, str] = {
     "spark.sql.legacy.parquet.nanosAsLong": "true",
     "spark.sql.autoBroadcastJoinThreshold": str(64 * 1024 * 1024),
     "spark.sql.session.timeZone": "UTC",
+    # Generated-class cache: an LRU keyed by the generated source, 100
+    # entries by default. Distinct classes compiled by a cold session
+    # (perfbench inputs, seed 1): 136 per dedup_curation job, 253-265
+    # per 22-query tpch_mix round, 35 per usgs_etl op. At 100 entries a
+    # curation job cycles the LRU, so every later job recompiled about
+    # 105 classes and loaded 190-270 new ones for HotSpot to compile
+    # again; at 1000, 0-8 per job (tpch_mix: about 235 per round to 0).
+    # 1000 is over twice the ~440 classes of one session serving all
+    # three workloads.
+    "spark.sql.codegen.cache.maxEntries": "1000",
     # Keep the UI off in tests and benchmarks: saves startup time and ports.
     "spark.ui.enabled": "false",
     # No console progress bars: they interleave with (and in captured

@@ -63,12 +63,11 @@ def additive_replay_stream(update_batches: list[DataFrame],
                                      F.coalesce("bb", F.lit(-1)))
                           .alias("b"))
                   )
-        from map_reduce_mongodb_spark.operators.graph import (
-            _checkpoint)
+        from map_reduce_mongodb_spark.cache import eager_checkpoint
         # lineage cut across the state overwrite; blocks are dead once
         # written — release at the RDD level (session-lifetime leak
         # otherwise)
-        merged, handles = _checkpoint(merged)
+        merged, handles = eager_checkpoint(merged)
         merged.write.mode("overwrite").parquet(state_path)
         for h in handles:
             h.unpersist(False)

@@ -5,6 +5,8 @@ from __future__ import annotations
 
 import json
 
+from pyspark.sql import functions as F
+
 from map_reduce_mongodb_spark.__main__ import main
 from tests.conftest import SF_DIR
 
@@ -51,19 +53,41 @@ def test_foreach_batch_sink(spark, tmp_path):
 def test_shared_parquet_materializes_once(spark):
     """cache.shared_parquet contract: the builder runs exactly once
     per key per process (consumers read the materialization), distinct
-    keys build independently, and results round-trip exactly."""
+    keys build independently, and results round-trip exactly. A
+    re-read launches no Spark job (no schema inference over the
+    parquet footers) and keeps the built column names and types."""
     from map_reduce_mongodb_spark.cache import clear_shared, shared_parquet
     calls = {"n": 0}
 
+    def frame():
+        return spark.range(5).select(F.col("id").alias("v"),
+                                     F.array("id").alias("arr"))
+
     def build():
         calls["n"] += 1
-        return spark.range(5).withColumnRenamed("id", "v")
+        return frame()
+
+    sc = spark.sparkContext
+
+    def call_in_group(group):
+        """shared_parquet(key x) and the ids of the jobs it launched."""
+        sc.setJobGroup(group, group)
+        try:
+            out = shared_parquet(spark, "test_key_sf/x", build)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return out, sc.statusTracker().getJobIdsForGroup(group)
 
     clear_shared()
     try:
-        a = shared_parquet(spark, "test_key_sf/x", build)
-        b = shared_parquet(spark, "test_key_sf/x", build)
+        a, build_jobs = call_in_group("shared_parquet_build")
+        b, reread_jobs = call_in_group("shared_parquet_reread")
         assert calls["n"] == 1
+        assert build_jobs, "the build's write should launch a job"
+        assert reread_jobs == []
+        assert a.dtypes == b.dtypes == frame().dtypes
         assert sorted(r.v for r in a.collect()) == [0, 1, 2, 3, 4]
         assert sorted(r.v for r in b.collect()) == [0, 1, 2, 3, 4]
         shared_parquet(spark, "test_key_sf/y", build)
