@@ -20,12 +20,19 @@ depends on a single materialization — e.g. a range-partitioned frame
 read by two branches, where recomputation re-samples partition
 boundaries per branch and can diverge under load (the r6
 ``distributed_cumsum`` bug). Such plans must use
-:func:`eager_checkpoint` instead: a released checkpoint is DEAD, so a
+:func:`checkpoint_leaf` instead: a released checkpoint is DEAD, so a
 stale consumer fails loudly rather than silently recomputing wrong.
-Checkpoint-backed results (:func:`track_rdd` /
-:func:`eager_checkpoint`) must therefore be consumed before the next
+Checkpoint-backed results must therefore be consumed before the next
 registered query is built (true of every entry-point, perfbench and
 test flow here, which collect each query before building the next).
+
+A checkpoint owns its blocks: :func:`checkpoint_leaf` reads the
+backing RDD from the checkpoint's own plan, never from a diff of the
+process-wide persisted-RDD list, so an RDD another client persists
+meanwhile is never taken for a checkpoint's block. Iterative operators
+drop a superseded round with :func:`release_leaf`; the rest go at
+:func:`release_caches`. No caller outside this module sees an RDD
+handle.
 """
 
 from __future__ import annotations
@@ -35,12 +42,14 @@ import shutil
 import tempfile
 from typing import Callable
 
+from py4j.protocol import Py4JError
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
 from pyspark.storagelevel import StorageLevel
 
 _LIVE: list[DataFrame] = []
-_LIVE_RDDS: list = []  # py4j handles of localCheckpoint-persisted RDDs
+# (checkpoint_leaf result, py4j handle of its backing RDD)
+_LEAVES: list[tuple[DataFrame, object]] = []
 
 # -- shared materializations (cross-query, process-scoped) -------------
 # key -> (parquet path, schema of the built DataFrame)
@@ -206,97 +215,68 @@ def tracked_persist(df: DataFrame,
     return df
 
 
-def _persistent_rdds(spark) -> dict:
-    """id → JVM RDD handle of every currently-persisted RDD.
+def checkpoint_leaf(df: DataFrame) -> DataFrame:
+    """Eagerly checkpoint ``df`` into a plan LEAF that owns its blocks.
 
-    Deliberate private-API use, version-pinned: ``SparkContext._jsc``
-    (the Py4J JavaSparkContext) and ``sc().getPersistentRDDs()`` (a
-    PUBLIC Scala API, reached through the private Python handle) are
-    stable across Spark 3.x/4.x (developed against 4.1). There is no
-    public PySpark surface that enumerates persisted RDDs, and
-    ``DataFrame.unpersist`` does not release localCheckpoint blocks —
-    this is the only way to free them. If a future Spark moves the
-    handle, the except below degrades GRACEFULLY: checkpoint blocks
-    are simply not freed early (they still die with the session /
-    ContextCleaner), trading memory hygiene for correctness instead of
-    crashing the query."""
-    try:
-        it = spark.sparkContext._jsc.sc().getPersistentRDDs().iterator()
-        out = {}
-        while it.hasNext():
-            t = it.next()
-            out[t._1()] = t._2()
-        return out
-    except Exception:  # AttributeError (API moved) or Py4J errors
-        return {}
+    Every consumer (and every union branch) reads the materialization
+    instead of re-running the subtree, and lineage is cut, so an
+    iterative loop's plan stays flat. Use this instead of
+    :func:`tracked_persist` whenever the plan's CORRECTNESS (not just
+    its cost) depends on a single materialization: a released block
+    fails loudly instead of silently recomputing a divergent result
+    (module docstring).
 
-
-def eager_checkpoint(df: DataFrame):
-    """``localCheckpoint(eager=True)`` + the JVM handles of the RDD
-    blocks it just persisted (``DataFrame.unpersist`` does NOT release
-    those — they must be dropped at the RDD level; register them with
-    :func:`track_rdd` or release them when a loop supersedes them).
-    Assumes the single-threaded query-builder context: no concurrent
-    persists.
-
-    Use this instead of :func:`tracked_persist` whenever the plan's
-    CORRECTNESS (not just its cost) depends on a single
-    materialization — a checkpoint severs lineage, so a released/lost
-    block fails loudly instead of silently recomputing a divergent
-    result (module docstring).
+    The backing RDD is read from the result's own plan (a
+    ``LogicalRDD``; ``DataFrame.unpersist`` does not release it) and
+    registered for :func:`release_caches`; :func:`release_leaf` drops
+    it earlier. Reaching it goes through the private Py4J handle
+    ``_jdf`` (developed against Spark 4.1). If a future Spark moves
+    it, the leaf is simply not registered: its blocks die with the
+    session or the ContextCleaner instead of the query crashing.
 
     Cluster mode: executor-LOCAL checkpoint blocks die with a lost
-    executor (the first casualty of a multi-hour 100 TB job), so when
-    the session has a fault-tolerant checkpoint dir configured
-    (``SparkContext.setCheckpointDir`` — HDFS/S3 in production) this
-    AUTOMATICALLY switches to reliable ``DataFrame.checkpoint``: same
-    plan shape, files instead of blocks, survives executor loss.
+    executor, so when the session has a fault-tolerant checkpoint dir
+    configured (``SparkContext.setCheckpointDir``, HDFS/S3 in
+    production) this switches to reliable ``DataFrame.checkpoint``:
+    same plan shape, files instead of blocks, survives executor loss.
     Checkpoint files are owned by the ContextCleaner
-    (``spark.cleaner.referenceTracking.cleanCheckpoints=true`` to
-    reap them eagerly); no RDD handles to track. Set
-    ``spark.graft.reliableCheckpoint=off`` to force the local path
-    even with a dir configured (tests do, to stay hermetic)."""
+    (``spark.cleaner.referenceTracking.cleanCheckpoints=true`` reaps
+    them eagerly), so nothing is registered. Set
+    ``spark.graft.reliableCheckpoint=off`` to force the local path even
+    with a dir configured (tests do, to stay hermetic)."""
     spark = df.sparkSession
     try:
         mode = spark.conf.get("spark.graft.reliableCheckpoint", "auto")
     except Exception:
         mode = "auto"
     if mode != "off" and spark.sparkContext.getCheckpointDir():
-        return df.checkpoint(eager=True), []
-    before = set(_persistent_rdds(spark))
+        return df.checkpoint(eager=True)
     out = df.localCheckpoint(eager=True)
-    handles = [r for i, r in _persistent_rdds(spark).items()
-               if i not in before]
-    return out, handles
+    try:
+        rdd = out._jdf.queryExecution().logical().rdd()
+    except (AttributeError, Py4JError):  # the handle or plan moved
+        return out
+    _LEAVES.append((out, rdd))
+    return out
 
 
-def checkpoint_leaf(df: DataFrame) -> DataFrame:
-    """:func:`eager_checkpoint` + :func:`track_rdd` in one step: turn a
-    reused node-scaled table into a plan LEAF so every consumer (and
-    every union branch) reads the materialization instead of re-running
-    the subtree (the r9 union-duplication sweep's standard fix). The
-    backing blocks are registered for bulk :func:`release_caches`."""
-    ck, handles = eager_checkpoint(df)
-    for h in handles:
-        track_rdd(h)
-    return ck
-
-
-def track_rdd(handle) -> None:
-    """Register a JVM RDD handle (e.g. a DataFrame.localCheckpoint's
-    backing RDD, which DataFrame.unpersist() does NOT release) for
-    bulk release. After release the checkpointed DataFrame is dead —
-    only register blocks whose consumer finished or whose result the
-    next query rebuild can recompute from source."""
-    _LIVE_RDDS.append(handle)
+def release_leaf(df: DataFrame) -> None:
+    """Unpersist a :func:`checkpoint_leaf` result now (non-blocking)
+    and forget it; ``df`` is dead afterwards. A no-op for a frame this
+    module did not register."""
+    for i, (leaf, rdd) in enumerate(_LEAVES):
+        if leaf is df:
+            del _LEAVES[i]
+            rdd.unpersist(False)
+            return
 
 
 def release_caches() -> int:
-    """Unpersist every tracked DataFrame and checkpoint RDD
+    """Unpersist every tracked DataFrame and checkpoint leaf
     (non-blocking); returns how many were released."""
-    n = len(_LIVE) + len(_LIVE_RDDS)
+    n = len(_LIVE) + len(_LEAVES)
     while _LIVE:
         _LIVE.pop().unpersist()
-    while _LIVE_RDDS:
-        _LIVE_RDDS.pop().unpersist(False)
+    while _LEAVES:
+        _LEAVES.pop()[1].unpersist(False)
     return n

@@ -11,7 +11,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, SparkSession
 
 #: Driver test tables (TESTDATA.md). One parquet file per table.
 TABLE_NAMES: tuple[str, ...] = (
@@ -20,20 +20,6 @@ TABLE_NAMES: tuple[str, ...] = (
 )
 
 DEFAULT_SF_DIR = "/root/testdata/sf0.001"
-
-#: Timestamp columns whose parquet unit has varied across driver
-#: testdata generations (current snapshots store TIMESTAMP(MICROS),
-#: which Spark reads natively; older ones stored TIMESTAMP(NANOS),
-#: which lands as BIGINT under ``spark.sql.legacy.parquet.nanosAsLong``).
-#: The scan is dtype-defensive: the DIV-1000 conversion below applies
-#: only when the column actually arrives as bigint — lossless either
-#: way, the corpus has 0 sub-µs digits. Streaming readers probe the
-#: footer for the same tolerance (streaming/windows.py).
-_NANO_TS_COLS: dict[str, tuple[str, ...]] = {
-    "orders": ("o_orderdate",),
-    "lineitem": ("l_shipdate",),
-    "events": ("ts",),
-}
 
 
 def sf_dir_from_env(default: str = DEFAULT_SF_DIR) -> str:
@@ -46,8 +32,8 @@ def ensure_worker_imports(spark: SparkSession) -> None:
     Python UDF stages (mapInPandas / applyInPandas) pickle module-level
     helpers BY REFERENCE, so workers must be able to import the
     package. The hosting process may have loaded us from a bare
-    ``sys.path.insert`` (the grading driver does) which workers don't
-    inherit — a zip on the Spark files path works everywhere."""
+    ``sys.path.insert`` (as ``__spark_entry__.py`` does) which workers
+    don't inherit — a zip on the Spark files path works everywhere."""
     flag = "_mrms_pkg_shipped"
     sc = spark.sparkContext
     if getattr(sc, flag, False):
@@ -130,21 +116,11 @@ def _inject_task_faults(df: DataFrame) -> DataFrame:
 _SCAN_CACHE: dict[tuple[str, str, str, int, int], DataFrame] = {}
 
 
-def clear_scan_cache() -> None:
-    """Forget memoized scan plans (corpus swaps mid-process are already
-    handled by the stat-keyed cache key; this is for tests)."""
-    _SCAN_CACHE.clear()
-
-
 def table(spark: SparkSession, name: str, sf_dir: str | None = None) -> DataFrame:
     """Scan one named table (S5 analogue: full scan; Catalyst prunes)."""
     if name not in TABLE_NAMES:
         raise KeyError(f"unknown table {name!r}; have {TABLE_NAMES}")
     sf_dir = sf_dir or sf_dir_from_env()
-    # Defensive: the caller's session may not come from get_spark() (the
-    # grading driver builds its own); without this conf the nano-
-    # timestamp parquet is unreadable. Runtime-settable, verified.
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     ensure_worker_imports(spark)
     path = os.path.join(sf_dir, f"{name}.parquet")
     try:
@@ -169,20 +145,6 @@ def table(spark: SparkSession, name: str, sf_dir: str | None = None) -> DataFram
     df = _SCAN_CACHE.get(key) if key is not None else None
     if df is None:
         df = spark.read.parquet(path)
-        for c in _NANO_TS_COLS.get(name, ()):
-            if c in df.columns and dict(df.dtypes)[c] == "bigint":
-                # Integer DIV, not `/`: float division of epoch-nanos
-                # loses precision beyond double's 53-bit mantissa.
-                # timestampadd on an NTZ epoch base, NOT
-                # timestamp_micros: the parquet values are naive (no
-                # zone), and micros files read natively as
-                # TIMESTAMP_NTZ — producing LTZ here would make the
-                # column's rendered values depend on the session
-                # timezone AND on which unit the corpus was written
-                # with.
-                df = df.withColumn(c, F.expr(
-                    f"timestampadd(MICROSECOND, {c} DIV 1000, "
-                    f"TIMESTAMP_NTZ '1970-01-01 00:00:00')"))
         if key is not None:
             # Evict every entry for the same (application, path) whose
             # stat differs, under ANY wrapper token: after an in-place

@@ -180,23 +180,6 @@ def _candidates_from_banded(banded: DataFrame, id_col: str,
     )
 
 
-def minhash_lsh_candidates(df: DataFrame, text_col: str = "text",
-                           id_col: str = "doc_id", num_hashes: int = 16,
-                           bands: int = 4, shingle_n: int = 3) -> DataFrame:
-    """Candidate near-dup pairs via banding: docs sharing any band's
-    hash land in one bucket; self-join per bucket. Returns distinct
-    (id_a < id_b) candidate pairs.
-
-    The signature DataFrame is persisted: the self-join consumes it
-    twice, and without the boundary both sides re-derive signatures
-    from raw text (and Catalyst inlines the signature expression into
-    the join keys — the 25× trap again)."""
-    sigs = tracked_persist(minhash_signatures(df, text_col, id_col,
-                                              num_hashes, shingle_n))
-    return _candidates_from_banded(
-        _banded(sigs, id_col, num_hashes, bands), id_col)
-
-
 def minhash_dedup_pairs(df: DataFrame, text_col: str = "text",
                         id_col: str = "doc_id", threshold: float = 0.7,
                         num_hashes: int = 16, bands: int = 4,

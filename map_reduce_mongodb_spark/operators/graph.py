@@ -17,9 +17,12 @@ Scale notes:
   materializes a giant array on one task; its edges stay distributed
   rows.
 - Iterative DataFrame loops grow lineage without bound; each round is
-  cut with ``cache.eager_checkpoint``: ``localCheckpoint(eager=True)``
+  cut with ``cache.checkpoint_leaf``: ``localCheckpoint(eager=True)``
   (executor-local blocks), or a reliable ``checkpoint()`` — same plan
-  shape — once the session has ``setCheckpointDir`` configured.
+  shape — once the session has ``setCheckpointDir`` configured. A
+  round's leaf is dropped with ``cache.release_leaf`` as soon as the
+  next round supersedes it; the final leaf stays registered until
+  ``cache.release_caches``.
 - Convergence is detected with a deterministic (count, xxhash64-xor)
   checksum of the edge set, OBSERVED during the checkpoint job itself
   (``DataFrame.observe`` + ``Observation``): one blocking job per
@@ -95,17 +98,17 @@ def _checkpoint_checksummed(edges: DataFrame):
     """Eager-checkpoint ``edges`` while OBSERVING its deterministic
     (count, xxhash64-xor) checksum inside the same job — bit_xor (not
     sum) of the row hashes is order-insensitive and free of ANSI
-    long-overflow. Returns (checkpointed_df, rdd_handles, (n, h));
-    the convergence test costs zero extra jobs."""
-    from map_reduce_mongodb_spark.cache import eager_checkpoint
+    long-overflow. Returns (checkpoint_leaf, (n, h)); the convergence
+    test costs zero extra jobs."""
+    from map_reduce_mongodb_spark.cache import checkpoint_leaf
     obs = Observation()
-    ck, handles = eager_checkpoint(edges.observe(
+    ck = checkpoint_leaf(edges.observe(
         obs,
         F.count(F.lit(1)).alias("n"),
         F.coalesce(F.bit_xor(F.xxhash64("src", "dst")),
                    F.lit(0)).alias("h")))
     got = obs.get
-    return ck, handles, (int(got["n"]), int(got["h"]))
+    return ck, (int(got["n"]), int(got["h"]))
 
 
 def symmetrize(pairs: DataFrame, id_a: str = "id_a",
@@ -151,7 +154,8 @@ def connected_components(edges: DataFrame, src: str = "src",
     The input is checkpointed eagerly before round 1, so the four
     symmetrize union branches read one materialization and convergence
     starts from the input's checksum."""
-    from map_reduce_mongodb_spark.cache import note_build_metric, track_rdd
+    from map_reduce_mongodb_spark.cache import (
+        note_build_metric, release_leaf)
 
     # No ``.distinct()`` on the input (r12): the star rounds are
     # multiset-tolerant (every aggregate is duplicate-insensitive and
@@ -163,15 +167,13 @@ def connected_components(edges: DataFrame, src: str = "src",
     # multiset with a fixpoint (the count component differs).
     e = (edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
               .where(F.col(src) != F.col(dst)))
-    e, handles, prev = _checkpoint_checksummed(e)
+    e, prev = _checkpoint_checksummed(e)
     rounds = 0
     for _ in range(max_iter):
-        nxt, nxt_handles, cur = _checkpoint_checksummed(
-            _small_star(_large_star(e)))
+        nxt, cur = _checkpoint_checksummed(_small_star(_large_star(e)))
         rounds += 1
-        for h in handles:  # superseded iteration's blocks
-            h.unpersist(False)
-        e, handles = nxt, nxt_handles
+        release_leaf(e)  # superseded iteration's blocks
+        e = nxt
         if cur == prev:
             break
         prev = cur
@@ -179,14 +181,11 @@ def connected_components(edges: DataFrame, src: str = "src",
         raise RuntimeError(
             f"connected_components did not converge in {max_iter} rounds")
     note_build_metric("cc_rounds", rounds)
-    # The returned plan hangs off the FINAL checkpoint; its blocks are
-    # handed to the cache registry, so they live until the next
-    # registered query is built (same lifetime as tracked_persist
-    # caches — results must be consumed before the next build).
-    for h in handles:
-        track_rdd(h)
-    # At the fixpoint every edge is (member, component-min); the min
-    # itself appears only on the right side.
+    # The returned plan hangs off the FINAL checkpoint, which stays
+    # registered until the next registered query is built (same
+    # lifetime as tracked_persist caches — results must be consumed
+    # before the next build). At the fixpoint every edge is (member,
+    # component-min); the min itself appears only on the right side.
     labels = (e.select(F.col("src").alias("id"), F.col("dst").alias("cc"))
                .union(e.select(F.col("dst").alias("id"),
                                F.col("dst").alias("cc")))
@@ -205,7 +204,7 @@ def k_core(pairs: DataFrame, k: int, id_a: str = "id_a",
     Execution shape: each round is one map-side-combined degree
     aggregate + two semi-joins keyed by node id — O(edges) per round,
     no driver-side graph state; rounds cut lineage with the module's
-    localCheckpoint discipline (superseded rounds' RDD blocks released
+    checkpoint discipline (superseded rounds' leaves released
     immediately). Convergence is the module's observed edge-set
     checksum (edges unchanged ⟺ degrees unchanged ⟺ peel fixpoint),
     measured INSIDE each round's checkpoint job — one blocking job per
@@ -215,46 +214,45 @@ def k_core(pairs: DataFrame, k: int, id_a: str = "id_a",
     by data size; ``max_iter`` is a guard rail, and the loop raises if
     it trips without converging (a silently partial core would be
     wrong, not slow)."""
-    from map_reduce_mongodb_spark.cache import note_build_metric, track_rdd
+    from map_reduce_mongodb_spark.cache import note_build_metric
     sym = pairs.select(F.col(id_a).alias("src"),
                        F.col(id_b).alias("dst"))
     edges = sym.union(sym.select(F.col("dst").alias("src"),
                                  F.col("src").alias("dst")))
-    edges, handles, rounds = _peel(edges, k, max_iter)
+    edges, rounds = _peel(edges, k, max_iter)
     note_build_metric("kcore_rounds", rounds)
-    for h in handles:
-        track_rdd(h)
     return (_core_degrees(edges, k)
             .select(F.col("src").alias("id"), "core_degree"))
 
 
 def _peel(edges: DataFrame, k: int, max_iter: int):
     """Peel an already-SYMMETRIC edge set to its k-core fixpoint.
-    Returns (fixpoint_edges, final_checkpoint_handles, rounds). The
-    input's own checkpoint blocks (if any) are the caller's to manage
-    — only this peel's superseded intermediates are released here, so
+    Returns (fixpoint_edges, rounds); the fixpoint is a registered
+    checkpoint leaf. The input (if a leaf) is the caller's to manage —
+    only this peel's superseded intermediates are released here, so
     peels can be CHAINED off one another's fixpoints."""
-    handles: list = []
+    from map_reduce_mongodb_spark.cache import release_leaf
+    first = edges
     prev = None
     rounds = 0
     for _ in range(max_iter):
         deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("d"))
         keep = deg.where(F.col("d") >= k).select("src")
-        edges, nxt, cur = _checkpoint_checksummed(
+        nxt, cur = _checkpoint_checksummed(
             edges.join(keep, "src", "left_semi")
             .join(keep.select(F.col("src").alias("dst")), "dst",
                   "left_semi"))
         rounds += 1
-        for h in handles:
-            h.unpersist(False)
-        handles = nxt
+        if edges is not first:
+            release_leaf(edges)
+        edges = nxt
         if cur[0] == 0 or cur == prev:
             break
         prev = cur
     else:
         raise RuntimeError(
             f"k_core did not converge within {max_iter} rounds")
-    return edges, handles, rounds
+    return edges, rounds
 
 
 def _core_degrees(edges: DataFrame, k: int) -> DataFrame:
@@ -275,21 +273,18 @@ def k_core_profile(pairs: DataFrame, ks: list[int], id_a: str = "id_a",
     time; chained peels touch a strictly shrinking nucleus, so at
     corpus scale the k=3,4 passes cost near-nothing once the 2-core
     has collapsed the graph. Every intermediate core's checkpoint
-    blocks stay registered (track_rdd) until the next registered
-    query builds — the returned per-depth aggregates read them
-    lazily."""
-    from map_reduce_mongodb_spark.cache import note_build_metric, track_rdd
+    leaf stays registered until the next registered query builds —
+    the returned per-depth aggregates read them lazily."""
+    from map_reduce_mongodb_spark.cache import note_build_metric
 
     sym = pairs.select(F.col(id_a).alias("src"),
                        F.col(id_b).alias("dst"))
     edges = sym.union(sym.select(F.col("dst").alias("src"),
                                  F.col("src").alias("dst")))
     profiles = []
-    keep_handles: list = []
     for k in sorted(ks):
-        edges, handles, rounds = _peel(edges, k, max_iter)
+        edges, rounds = _peel(edges, k, max_iter)
         note_build_metric("kcore_rounds", rounds)
-        keep_handles.extend(handles)
         profiles.append(
             _core_degrees(edges, k)
             .agg(F.count(F.lit(1)).alias("n_core_docs"),
@@ -297,8 +292,6 @@ def k_core_profile(pairs: DataFrame, ks: list[int], id_a: str = "id_a",
                   .cast("long").alias("max_core_degree"))
             .select(F.lit(k).alias("k"), "n_core_docs",
                     "max_core_degree"))
-    for h in keep_handles:
-        track_rdd(h)
     out = profiles[0]
     for p in profiles[1:]:
         out = out.unionByName(p)

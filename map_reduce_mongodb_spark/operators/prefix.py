@@ -44,7 +44,7 @@ against a busy machine). The fix is structural: the ranged frame is
 MATERIALIZED once and both branches read that one materialization —
 boundaries are sampled exactly once, under any load.
 
-Why ``eager_checkpoint`` and not ``tracked_persist`` (the r6 shape):
+Why ``checkpoint_leaf`` and not ``tracked_persist`` (the r6 shape):
 a persist is advisory — ``release_caches()`` (which every registered
 query builder fires on entry) or memory-pressure eviction silently
 REPLANS the frame on next touch, re-opening the exact two-exchange
@@ -78,7 +78,7 @@ def distributed_cumsum(df: DataFrame, order_by: list[Column],
     computed with the two-pass range-partitioned scan described in the
     module docstring. Returns ``df``'s columns plus ``out``.
     """
-    from map_reduce_mongodb_spark.cache import eager_checkpoint, track_rdd
+    from map_reduce_mongodb_spark.cache import checkpoint_leaf
 
     if num_partitions is None:
         num_partitions = df.sparkSession.sparkContext.defaultParallelism
@@ -86,12 +86,10 @@ def distributed_cumsum(df: DataFrame, order_by: list[Column],
     # of the sampled range boundaries (see module docstring — a
     # recomputable persist can silently re-sample after release and
     # corrupt the ranks; a checkpoint fails loudly instead).
-    ranged, handles = eager_checkpoint(
+    ranged = checkpoint_leaf(
         df.repartitionByRange(num_partitions, *order_by)
           .withColumn("_pid", F.spark_partition_id())
           .withColumn("_v", value))
-    for h in handles:
-        track_rdd(h)
     w_local = (Window.partitionBy("_pid").orderBy(*order_by)
                .rowsBetween(Window.unboundedPreceding, Window.currentRow))
     local = ranged.withColumn("_local", F.sum("_v").over(w_local))
@@ -128,18 +126,16 @@ def distributed_cummax_exclusive(df: DataFrame, order_by: list[Column],
     skips NULLs, handling both the partition-first and global-first
     rows).
     """
-    from map_reduce_mongodb_spark.cache import eager_checkpoint, track_rdd
+    from map_reduce_mongodb_spark.cache import checkpoint_leaf
 
     if num_partitions is None:
         num_partitions = df.sparkSession.sparkContext.defaultParallelism
     # Checkpointed for the same _pid-consistency reason as
     # distributed_cumsum (module docstring).
-    ranged, handles = eager_checkpoint(
+    ranged = checkpoint_leaf(
         df.repartitionByRange(num_partitions, *order_by)
           .withColumn("_pid", F.spark_partition_id())
           .withColumn("_v", value))
-    for h in handles:
-        track_rdd(h)
     w_local = (Window.partitionBy("_pid").orderBy(*order_by)
                .rowsBetween(Window.unboundedPreceding, -1))
     local = ranged.withColumn("_local", F.max("_v").over(w_local))

@@ -139,16 +139,15 @@ def scd2_replay_stream(dim: DataFrame, update_batches: list[DataFrame],
     def upsert(batch_df: DataFrame, _epoch: int) -> None:
         if batch_df.isEmpty():
             return
-        from map_reduce_mongodb_spark.cache import eager_checkpoint
+        from map_reduce_mongodb_spark.cache import (
+            checkpoint_leaf, release_leaf)
         cur = batch_df.sparkSession.read.parquet(dim_path)
         # checkpoint cuts lineage across the overwrite of dim_path; the
-        # blocks are dead once the write lands — drop them at the RDD
-        # level or every epoch leaks storage for the session's lifetime
-        merged, handles = eager_checkpoint(scd2_apply(cur, batch_df, key,
-                                                      attrs))
+        # blocks are dead once the write lands — release them or every
+        # epoch leaks storage for the session's lifetime
+        merged = checkpoint_leaf(scd2_apply(cur, batch_df, key, attrs))
         merged.write.mode("overwrite").parquet(dim_path)
-        for h in handles:
-            h.unpersist(False)
+        release_leaf(merged)
 
     from map_reduce_mongodb_spark.sinks import foreach_batch
     stream = (spark.readStream.schema(schema)

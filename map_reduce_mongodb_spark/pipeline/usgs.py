@@ -275,12 +275,12 @@ def usgs_flat_join(events: DataFrame) -> DataFrame:
     )
 
 
-def usgs_pipeline(events: DataFrame, materialize: bool = True) -> DataFrame:
+def usgs_pipeline(events: DataFrame) -> DataFrame:
     """events → synthesized USGS rows → features → merged sites →
     exported Features. Returns the per-site Feature DataFrame (stage 4);
     stage 5 is opt-in via :func:`feature_collection`.
 
-    ``materialize=True`` persists the stage-2 ``features`` boundary —
+    The stage-2 ``features`` boundary is persisted —
     the analogue of the reference writing each stage to a collection
     (harvest.js:104-135). Two reasons, both real at scale: (a) stage 3
     consumes the feature expression in its filter AND its aggregate, so
@@ -290,8 +290,6 @@ def usgs_pipeline(events: DataFrame, materialize: bool = True) -> DataFrame:
     forces interpreted fallback); (b) at 100 TB the boundary would be a
     partitioned parquet write feeding many downstream consumers.
     """
-    features = geojson_features(synthesize_usgs(events))
-    if materialize:
-        features = tracked_persist(features)
+    features = tracked_persist(geojson_features(synthesize_usgs(events)))
     return export_features(
         merge_sites(features, order_key=F.col("_id").cast("long")))

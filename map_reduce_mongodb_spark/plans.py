@@ -54,7 +54,7 @@ def union_duplicate_subtrees(df: DataFrame) -> list[str]:
     is caught too). Empty list = no silent cross-branch recompute.
 
     Deliberate private-API use, version-pinned like
-    ``cache._persistent_rdds``: ``df._jdf.queryExecution()`` (the Py4J
+    ``cache.checkpoint_leaf``: ``df._jdf.queryExecution()`` (the Py4J
     QueryExecution handle) and ``semanticHash()`` / ``sameResult()``
     (PUBLIC Catalyst QueryPlan APIs reached through it) are stable
     across Spark 3.x/4.x. There is no public PySpark surface that

@@ -28,7 +28,8 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from map_reduce_mongodb_spark.cache import eager_checkpoint, release_caches
+from map_reduce_mongodb_spark.cache import (
+    checkpoint_leaf, release_caches, release_leaf)
 from map_reduce_mongodb_spark.io import table
 from map_reduce_mongodb_spark.operators.graph import symmetrize
 from map_reduce_mongodb_spark.pipeline.usgs import usgs_flat_join
@@ -5433,27 +5434,22 @@ def q_dup_graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
                 (F.lit(1.0) / F.col("n_nodes")).alias("r0")))
     edges_deg = tracked_persist(sym.join(deg, "id_a"))
     ranks = base.select("id", F.col("r0").alias("r"))
-    # graph.py's checkpoint discipline: each round's blocks replace
-    # the previous round's (RDD-level release — DataFrame.unpersist
-    # can't), the final round's go to the cache registry
-    from map_reduce_mongodb_spark.cache import track_rdd
-    handles: list = []
+    # graph.py's checkpoint discipline: each round's leaf replaces
+    # the previous round's, the final round's stays registered until
+    # the next query builds
     for _ in range(5):
         contrib = (edges_deg
                    .join(ranks.withColumnRenamed("id", "id_a"), "id_a")
                    .groupBy(F.col("id_b").alias("id"))
                    .agg(F.sum(F.col("r") / F.col("deg"))
                         .alias("contrib")))
-        ranks, nxt_handles = eager_checkpoint(
+        nxt = checkpoint_leaf(
             base.join(contrib, "id", "left")
             .select("id",
                     (F.col("base") + F.lit(0.85)
                      * F.coalesce("contrib", F.lit(0.0))).alias("r")))
-        for h in handles:  # superseded iteration's blocks
-            h.unpersist(False)
-        handles = nxt_handles
-    for h in handles:
-        track_rdd(h)
+        release_leaf(ranks)  # superseded iteration's blocks
+        ranks = nxt
     return ranks.select(F.col("id").alias("doc_id"),
                         F.round("r", 6).alias("pagerank"))
 
@@ -7094,7 +7090,6 @@ def q_dup_graph_bfs(spark: SparkSession, sf_dir: str) -> DataFrame:
     table; at 100 TB each round is one shuffle bounded by the
     frontier, and 4 rounds is the fixed probe depth (not data-
     dependent)."""
-    from map_reduce_mongodb_spark.cache import track_rdd
     pairs = _jaccard_pairs_07(spark, sf_dir).select("id_a", "id_b")
     sym = symmetrize(pairs)
     edges = sym.select(F.col("id_a").alias("src"),
@@ -7102,20 +7097,16 @@ def q_dup_graph_bfs(spark: SparkSession, sf_dir: str) -> DataFrame:
     dist = (edges.select("src").distinct()
             .where(F.col("src") % 10 == 0)
             .select(F.col("src").alias("id"), F.lit(0).alias("d")))
-    handles: list = []
     for _ in range(4):
         relaxed = (edges.join(dist.withColumnRenamed("id", "src"),
                               "src")
                    .select(F.col("dst").alias("id"),
                            (F.col("d") + 1).alias("d")))
-        dist, nxt = eager_checkpoint(
+        nxt = checkpoint_leaf(
             dist.unionByName(relaxed).groupBy("id")
             .agg(F.min("d").alias("d")))
-        for h in handles:
-            h.unpersist(False)
-        handles = nxt
-    for h in handles:
-        track_rdd(h)
+        release_leaf(dist)
+        dist = nxt
     return dist.select(F.col("id").alias("doc_id"),
                        F.col("d").cast("int").alias("hops"))
 
@@ -7161,7 +7152,6 @@ def q_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     state, lineage cut per round. The oracle unrolls the same 3
     rounds; vote counts and tiebreaks are integer-exact so labels
     match exactly. Reads the shared 0.7-Jaccard pair table."""
-    from map_reduce_mongodb_spark.cache import checkpoint_leaf, track_rdd
     pairs = _jaccard_pairs_07(spark, sf_dir).select("id_a", "id_b")
     sym = symmetrize(pairs)
     edges = sym.select(F.col("id_a").alias("src"),
@@ -7177,7 +7167,6 @@ def q_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.col("src").alias("id"),
                 (F.col("src") % 5).alias("lbl")))
     labels = seeds
-    handles: list = []
     for _ in range(3):
         cnt = (edges.join(labels.withColumnRenamed("id", "src"), "src")
                .groupBy(F.col("dst").alias("id"), "lbl")
@@ -7185,14 +7174,12 @@ def q_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
         w = Window.partitionBy("id").orderBy(F.desc("c"), F.asc("lbl"))
         win = (cnt.withColumn("rn", F.row_number().over(w))
                .filter(F.col("rn") == 1).select("id", "lbl"))
-        labels, nxt = eager_checkpoint(
+        nxt = checkpoint_leaf(
             seeds.unionByName(
                 win.join(seeds.select("id"), "id", "left_anti")))
-        for h in handles:
-            h.unpersist(False)
-        handles = nxt
-    for h in handles:
-        track_rdd(h)
+        if labels is not seeds:
+            release_leaf(labels)
+        labels = nxt
     return labels.select(F.col("id").alias("doc_id"),
                          F.col("lbl").cast("int").alias("label"))
 
@@ -8122,7 +8109,7 @@ def q_dup_graph_ppr(spark: SparkSession, sf_dir: str) -> DataFrame:
     once-materialized 0.7-Jaccard pair table; the oracle unrolls the
     identical 4 iterations, and 6dp rounding absorbs the ~1e-13
     cross-engine float drift (measured for the pagerank twin)."""
-    from map_reduce_mongodb_spark.cache import track_rdd, tracked_persist
+    from map_reduce_mongodb_spark.cache import tracked_persist
     pairs = _jaccard_pairs_07(spark, sf_dir).select("id_a", "id_b")
     sym = symmetrize(pairs)
     deg = sym.groupBy("id_a").agg(
@@ -8140,23 +8127,19 @@ def q_dup_graph_ppr(spark: SparkSession, sf_dir: str) -> DataFrame:
                  .otherwise(F.lit(0.0)).alias("r0")))
     edges_deg = tracked_persist(sym.join(deg, "id_a"))
     ranks = base.select("id", F.col("r0").alias("r"))
-    handles: list = []
     for _ in range(4):
         contrib = (edges_deg
                    .join(ranks.withColumnRenamed("id", "id_a"), "id_a")
                    .groupBy(F.col("id_b").alias("id"))
                    .agg(F.sum(F.col("r") / F.col("deg"))
                         .alias("contrib")))
-        ranks, nxt = eager_checkpoint(
+        nxt = checkpoint_leaf(
             base.join(contrib, "id", "left")
             .select("id",
                     (F.col("base") + F.lit(0.85)
                      * F.coalesce("contrib", F.lit(0.0))).alias("r")))
-        for h in handles:
-            h.unpersist(False)
-        handles = nxt
-    for h in handles:
-        track_rdd(h)
+        release_leaf(ranks)
+        ranks = nxt
     return ranks.select(F.col("id").alias("doc_id"),
                         F.round("r", 6).alias("ppr"))
 
@@ -8759,7 +8742,6 @@ def q_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     id tiebreaks in both engines. At 100 TB the pool stage is the
     existing top-k machinery; the MMR stage only ever touches
     |Q|·pool rows."""
-    from map_reduce_mongodb_spark.cache import track_rdd
     from map_reduce_mongodb_spark.functions.vectors import (
         cosine_unrolled)
     from map_reduce_mongodb_spark.operators.similarity import (
@@ -8773,12 +8755,10 @@ def q_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     # nearly all planning/codegen). Checkpointing the two
     # |Q|·pool-bounded tables — and each step's selection — keeps
     # every step's plan flat over tiny materialized inputs (~1 s).
-    handles: list = []
-    cand, h = eager_checkpoint(
+    cand = checkpoint_leaf(
         cosine_topk_bruteforce(emb, list(range(5)), k=pool)
         .select("query_id", "neighbor_id",
                 F.col("cosine").alias("rel")))
-    handles += h
     ev = emb.select("vec_id", "embedding")
     candv = (cand.join(ev, cand.neighbor_id == ev.vec_id)
              .select("query_id", "neighbor_id", "embedding"))
@@ -8786,12 +8766,11 @@ def q_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
                      F.col("embedding").alias("va"))
     b = candv.select("query_id", F.col("neighbor_id").alias("id_b"),
                      F.col("embedding").alias("vb"))
-    psim, h = eager_checkpoint(
+    psim = checkpoint_leaf(
         a.join(b, "query_id")
         .where(F.col("id_a") != F.col("id_b"))
         .select("query_id", "id_a", "id_b",
                 cosine_unrolled("va", "vb", 64).alias("sim")))
-    handles += h
     w1 = Window.partitionBy("query_id").orderBy(
         F.desc("rel"), F.asc("neighbor_id"))
     sel = (cand.withColumn("rn", F.row_number().over(w1))
@@ -8818,10 +8797,9 @@ def q_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .where(F.col("rn") == 1)
                 .select("query_id", "neighbor_id",
                         F.lit(t).alias("pick"), "score"))
-        sel, h = eager_checkpoint(sel.unionByName(pick))
-        handles += h
-    for h in handles:
-        track_rdd(h)
+        nxt = checkpoint_leaf(sel.unionByName(pick))
+        release_leaf(sel)
+        sel = nxt
     # + 0.0 after the round: a tiny-negative score (float noise when a
     # candidate duplicates a selected vector, rel ≈ ms) rounds to -0.0
     # in DuckDB but 0.0 in Spark, and the value hash is repr-sensitive

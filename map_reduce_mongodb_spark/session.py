@@ -40,13 +40,6 @@ _LOCAL_DEFAULTS: dict[str, str] = {
     # Pure-parquet workloads: bigger splits = fewer, denser tasks.
     "spark.sql.files.maxPartitionBytes": "134217728",
     "spark.sql.parquet.filterPushdown": "true",
-    # Unit tolerance for driver testdata: current snapshots store
-    # TIMESTAMP(MICROS) (read natively; this conf is then a no-op), but
-    # older generations stored TIMESTAMP(NANOS), which Spark's reader
-    # rejects outright without this conf. With it, nanos land as BIGINT
-    # and io.table's dtype-checked DIV-1000 conversion restores
-    # timestamps (lossless — the corpus has no sub-µs digits).
-    "spark.sql.legacy.parquet.nanosAsLong": "true",
     "spark.sql.autoBroadcastJoinThreshold": str(64 * 1024 * 1024),
     "spark.sql.session.timeZone": "UTC",
     # Generated-class cache: an LRU keyed by the generated source, 100

@@ -63,14 +63,13 @@ def additive_replay_stream(update_batches: list[DataFrame],
                                      F.coalesce("bb", F.lit(-1)))
                           .alias("b"))
                   )
-        from map_reduce_mongodb_spark.cache import eager_checkpoint
+        from map_reduce_mongodb_spark.cache import (
+            checkpoint_leaf, release_leaf)
         # lineage cut across the state overwrite; blocks are dead once
-        # written — release at the RDD level (session-lifetime leak
-        # otherwise)
-        merged, handles = eager_checkpoint(merged)
+        # written — release them (session-lifetime leak otherwise)
+        merged = checkpoint_leaf(merged)
         merged.write.mode("overwrite").parquet(state_path)
-        for h in handles:
-            h.unpersist(False)
+        release_leaf(merged)
 
     from map_reduce_mongodb_spark.sinks import foreach_batch
     stream = (spark.readStream.schema(schema)

@@ -15,45 +15,14 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-#: Driver events table schema (current testdata stores ts as
-#: TIMESTAMP(MICROS); {ts_type} is filled per-corpus by the footer
-#: probe in read_events_stream).
-_EVENTS_DDL = ("event_id long, ts {ts_type}, user_id long, "
+#: Events table schema (the testdata stores ts as TIMESTAMP(MICROS)).
+_EVENTS_DDL = ("event_id long, ts timestamp, user_id long, "
                "event_type string, value double, props string")
-
-
-def _ts_is_nanos(path: str) -> bool:
-    """Probe one parquet footer for events.ts stored as
-    TIMESTAMP(NANOS) (older driver testdata generations) — file
-    streams must declare their schema up front, so the batch path's
-    dtype-defensive unit handling (io._NANO_TS_COLS) needs this
-    metadata peek instead. Driver-side, metadata-only, no job."""
-    import glob
-    import os
-
-    import pyarrow.parquet as pq
-    if path.startswith("file:"):
-        path = "/" + path.removeprefix("file:").lstrip("/")
-    elif "://" in path:
-        return False  # remote URI: can't footer-probe locally; the
-        # current-generation MICROS schema is the safe default
-    files = (glob.glob(os.path.join(path, "*.parquet"))
-             if os.path.isdir(path) else [path])
-    if not files:
-        return False
-    try:
-        field = pq.ParquetFile(files[0]).schema_arrow.field("ts")
-    except Exception:  # ArrowInvalid / KeyError on odd footers —
-        return False   # fall back to the MICROS default schema
-    return getattr(field.type, "unit", None) == "ns"
 
 
 def read_events_stream(spark: SparkSession, path: str) -> DataFrame:
     """``readStream`` over an events parquet directory (file source =
-    replayable, exactly-once). Tolerates both timestamp units the
-    driver testdata has used: MICROS streams natively; NANOS is
-    declared as long and converted with integer DIV (never float —
-    epoch-nanos overflow double's 53-bit mantissa)."""
+    replayable, exactly-once)."""
     # ts stays TIMESTAMP (LTZ) here, NOT the NTZ the batch scan
     # produces: Structured Streaming watermarks reject NTZ event time
     # (EVENT_TIME_IS_NOT_ON_TIMESTAMP_TYPE), and this source feeds the
@@ -62,17 +31,7 @@ def read_events_stream(spark: SparkSession, path: str) -> DataFrame:
     # an LTZ value is session-zone-dependent, which is why every
     # window function below converts exposed timestamps back to NTZ
     # UTC fields via ntz_utc() before returning.
-    if _ts_is_nanos(path):
-        # same defensive conf the batch path (io.table) sets: nanos
-        # only map to BIGINT under the legacy conf, and the caller's
-        # session may not come from get_spark() (r9 review)
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        stream = spark.readStream.schema(
-            _EVENTS_DDL.format(ts_type="long")).parquet(path)
-        return stream.withColumn(
-            "ts", F.expr("timestamp_micros(ts DIV 1000)"))
-    return spark.readStream.schema(
-        _EVENTS_DDL.format(ts_type="timestamp")).parquet(path)
+    return spark.readStream.schema(_EVENTS_DDL).parquet(path)
 
 
 def _ts_is_ltz(events: DataFrame) -> bool:

@@ -108,6 +108,42 @@ def test_no_leaked_caches(spark):
     assert jsc.getPersistentRDDs().size() <= base
 
 
+def test_checkpoint_keeps_rdd_another_client_caches(spark, monkeypatch):
+    """An RDD another client caches while connected_components takes
+    its first checkpoint belongs to that client: CC must release only
+    its own checkpoint blocks, never the other RDD."""
+    from map_reduce_mongodb_spark.cache import release_caches
+
+    edges = spark.createDataFrame([(i, i + 1) for i in range(12)],
+                                  "src: long, dst: long")
+    # the classic DataFrame class: pyspark.sql.DataFrame is an
+    # abstract base in Spark 4, so patching it would do nothing
+    cls = type(edges)
+    original = cls.localCheckpoint
+    other = []
+
+    def local_checkpoint(self, *args, **kwargs):
+        if not other:
+            rdd = spark.sparkContext.parallelize(range(8)).cache()
+            rdd.count()
+            other.append(rdd)
+        return original(self, *args, **kwargs)
+
+    monkeypatch.setattr(cls, "localCheckpoint", local_checkpoint)
+    try:
+        got = {r["id"]: r["cc"]
+               for r in connected_components(edges).collect()}
+        assert got == {v: 0 for v in range(13)}
+        live = spark.sparkContext._jsc.sc().getPersistentRDDs()
+        assert live.contains(other[0].id()), \
+            "another client's cached RDD was unpersisted"
+    finally:
+        monkeypatch.undo()
+        release_caches()
+        for rdd in other:
+            rdd.unpersist()
+
+
 def test_pagerank_conserves_mass_and_ranks_hubs(spark):
     """dup_graph_pagerank invariants: scores sum to 1 over the graph
     (symmetric graph, no dangling mass) and a hub out-scores leaves."""

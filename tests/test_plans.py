@@ -170,8 +170,8 @@ def test_cache_hygiene_bounded_and_releasable(spark):
     """Operators persist via cache.tracked_persist and every query
     builder releases the previous query's caches — so a sweep holds at
     most one query's caches, and an explicit release_caches() drops to
-    zero persistent RDDs (the long-lived-session contract perfbench and
-    the grading driver rely on)."""
+    zero persistent RDDs (the long-lived-session contract perfbench
+    relies on)."""
     from map_reduce_mongodb_spark.cache import release_caches
 
     spark.catalog.clearCache()

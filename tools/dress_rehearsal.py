@@ -145,7 +145,8 @@ def main() -> int:
     ap.add_argument("--bare", action="store_true",
                     help="plain SparkSession (no repo confs) — catches "
                          "missing-conf / worker-unpickling failures that "
-                         "get_spark masks; closest to the grading driver")
+                         "get_spark masks, as a host-built session "
+                         "would")
     ap.add_argument("--master", default="local[*]",
                     help="bare-session master override (e.g. local[5]) "
                          "— partition-LAYOUT sensitivity sweeps: every "
@@ -189,7 +190,7 @@ def main() -> int:
                          "answer for identical inputs")
     ap.add_argument("--checkpoint-dir", default=None,
                     help="SparkContext.setCheckpointDir path — flips "
-                         "cache.eager_checkpoint to the RELIABLE "
+                         "cache.checkpoint_leaf to the RELIABLE "
                          "DataFrame.checkpoint path (the 100 TB "
                          "cluster mode), exercising checkpoint-file "
                          "write/read instead of local blocks")
@@ -245,7 +246,7 @@ def main() -> int:
                           master=(args.master
                                   if args.master != "local[*]" else None))
         if args.checkpoint_dir:
-            # flips cache.eager_checkpoint's auto-switch to reliable
+            # flips cache.checkpoint_leaf's auto-switch to reliable
             # DataFrame.checkpoint (files under this dir; delete the
             # dir after the sweep — the cleanCheckpoints conf is
             # creation-time-only, not runtime-settable)
@@ -343,7 +344,7 @@ def main() -> int:
                 except Exception:
                     pass
                 cache._LIVE.clear()
-                cache._LIVE_RDDS.clear()
+                cache._LEAVES.clear()
                 cache.clear_shared()
                 try:
                     spark.stop()  # clears the instantiated session
