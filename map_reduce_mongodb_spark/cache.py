@@ -241,15 +241,9 @@ def checkpoint_leaf(df: DataFrame) -> DataFrame:
     same plan shape, files instead of blocks, survives executor loss.
     Checkpoint files are owned by the ContextCleaner
     (``spark.cleaner.referenceTracking.cleanCheckpoints=true`` reaps
-    them eagerly), so nothing is registered. Set
-    ``spark.graft.reliableCheckpoint=off`` to force the local path even
-    with a dir configured (tests do, to stay hermetic)."""
-    spark = df.sparkSession
-    try:
-        mode = spark.conf.get("spark.graft.reliableCheckpoint", "auto")
-    except Exception:
-        mode = "auto"
-    if mode != "off" and spark.sparkContext.getCheckpointDir():
+    them eagerly), so nothing is registered. Whether a dir is set is
+    the only switch."""
+    if df.sparkSession.sparkContext.getCheckpointDir():
         return df.checkpoint(eager=True)
     out = df.localCheckpoint(eager=True)
     try:

@@ -10,6 +10,8 @@ alternation, quantifiers — valid in both Java regex and RE2).
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -110,44 +112,56 @@ def fingerprint(col: Column) -> Column:
     return F.md5(normalized)
 
 
+def sliding(arr: Column, n: int,
+            combine: Callable[[list[Column]], Column]) -> Column:
+    """``combine([arr[i], ..., arr[i+n-1]])`` for every run of n consecutive
+    elements of ``arr``, in order; shorter than n gives an empty array.
+
+    Built as ``arrays_zip`` of n shifted ``slice``s of ``arr``, then one
+    transform that touches only its element. The obvious formulation
+    — indexing the array from inside the lambda
+    (``transform(sequence(...), i -> f(a[i], a[i+1], ...))``) —
+    re-evaluates the array's whole definition (for words, the
+    ``split``) per element per index and measured ~10× slower over the
+    corpus."""
+    m = F.greatest(F.size(arr) - F.lit(n - 1), F.lit(0))
+    zipped = F.arrays_zip(*[F.slice(arr, j + 1, m) for j in range(n)])
+    return F.transform(zipped,
+                       lambda s: combine([s[str(j)] for j in range(n)]))
+
+
+def word_ngrams(w: Column, n: int, hashed: bool = False) -> Column:
+    """Ordered word n-grams of the words array ``w`` (repeats kept):
+    'w1 w2 w3' strings, or with ``hashed`` xxhash64(w1, ..., wn) longs
+    hashed straight from the n-tuple, so no gram string is ever
+    concatenated (that concatenation dominates the string form's
+    cost)."""
+    if hashed:
+        return sliding(w, n, lambda fs: F.xxhash64(*fs))
+    return sliding(w, n, lambda fs: F.concat_ws(" ", *fs))
+
+
+def _shingles(col: Column, n: int, distinct: bool, hashed: bool) -> Column:
+    w = words(col)
+    grams = word_ngrams(w, n, hashed)
+    if distinct:
+        grams = F.array_distinct(grams)
+    empty = "array<bigint>" if hashed else "array<string>"
+    return F.when(F.size(w) >= n, grams).otherwise(F.array().cast(empty))
+
+
 def word_shingles(col: Column, n: int = 3, distinct: bool = True) -> Column:
     """Word n-gram shingles (array of 'w1 w2 w3' strings) — the unit
     set for Jaccard/MinHash near-dup detection (distinct=True) or for
-    n-gram counting (distinct=False).
-
-    Built as ``arrays_zip`` of n shifted ``slice``s of the words array,
-    then one transform that touches only its element. The obvious
-    formulation — indexing the words array from inside the lambda
-    (``transform(sequence(...), i -> concat(w[i], w[i+1], ...))``) —
-    re-evaluates the whole ``split`` per element per index and measured
-    ~10× slower over the corpus."""
-    w = words(col)
-    m = F.greatest(F.size(w) - F.lit(n - 1), F.lit(0))
-    zipped = F.arrays_zip(*[F.slice(w, j + 1, m) for j in range(n)])
-    grams = F.transform(
-        zipped, lambda s: F.concat_ws(" ", *[s[str(j)] for j in range(n)]))
-    if distinct:
-        grams = F.array_distinct(grams)
-    return F.when(F.size(w) >= n, grams) \
-        .otherwise(F.array().cast("array<string>"))
+    n-gram counting (distinct=False)."""
+    return _shingles(col, n, distinct, hashed=False)
 
 
 def hashed_word_shingles(col: Column, n: int = 3,
                          distinct: bool = True) -> Column:
     """xxhash64 word n-gram shingles (array<bigint>) — the Spark-only
-    fast twin of :func:`word_shingles`: each shingle is hashed
-    DIRECTLY from its n word columns (``xxhash64(w1, ..., wn)`` hashes
-    the tuple), so the per-gram string concatenation — which dominates
-    the string variant's cost — never happens, and downstream joins/
-    set ops move fixed 8-byte keys. Two distinct grams collide with
-    probability 2⁻⁶⁴; not SQL-reproducible (no DuckDB xxhash64), so
-    use only in rows-only-checked queries."""
-    w = words(col)
-    m = F.greatest(F.size(w) - F.lit(n - 1), F.lit(0))
-    zipped = F.arrays_zip(*[F.slice(w, j + 1, m) for j in range(n)])
-    grams = F.transform(
-        zipped, lambda s: F.xxhash64(*[s[str(j)] for j in range(n)]))
-    if distinct:
-        grams = F.array_distinct(grams)
-    return F.when(F.size(w) >= n, grams) \
-        .otherwise(F.array().cast("array<bigint>"))
+    fast lane of :func:`word_shingles`: downstream joins/set ops move
+    fixed 8-byte keys. Two distinct grams collide with probability
+    2⁻⁶⁴; not SQL-reproducible (no DuckDB xxhash64), so use only in
+    rows-only-checked queries."""
+    return _shingles(col, n, distinct, hashed=True)

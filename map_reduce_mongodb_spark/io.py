@@ -22,10 +22,6 @@ TABLE_NAMES: tuple[str, ...] = (
 DEFAULT_SF_DIR = "/root/testdata/sf0.001"
 
 
-def sf_dir_from_env(default: str = DEFAULT_SF_DIR) -> str:
-    return os.environ.get("SPARK_GRAFT_SF_DIR", default)
-
-
 def ensure_worker_imports(spark: SparkSession) -> None:
     """Ship this package to Python workers via addPyFile.
 
@@ -116,11 +112,10 @@ def _inject_task_faults(df: DataFrame) -> DataFrame:
 _SCAN_CACHE: dict[tuple[str, str, str, int, int], DataFrame] = {}
 
 
-def table(spark: SparkSession, name: str, sf_dir: str | None = None) -> DataFrame:
+def table(spark: SparkSession, name: str, sf_dir: str) -> DataFrame:
     """Scan one named table (S5 analogue: full scan; Catalyst prunes)."""
     if name not in TABLE_NAMES:
         raise KeyError(f"unknown table {name!r}; have {TABLE_NAMES}")
-    sf_dir = sf_dir or sf_dir_from_env()
     ensure_worker_imports(spark)
     path = os.path.join(sf_dir, f"{name}.parquet")
     try:
@@ -163,11 +158,10 @@ def table(spark: SparkSession, name: str, sf_dir: str | None = None) -> DataFram
     return df
 
 
-def load_tables(spark: SparkSession, sf_dir: str | None = None,
+def load_tables(spark: SparkSession, sf_dir: str,
                 register_views: bool = False) -> dict[str, DataFrame]:
     """Load the whole catalog; optionally register temp views so
     ``spark.sql`` / the S7 name-lookup path works by name."""
-    sf_dir = sf_dir or sf_dir_from_env()
     out: dict[str, DataFrame] = {}
     for name in TABLE_NAMES:
         df = table(spark, name, sf_dir)

@@ -1,5 +1,5 @@
 """Deduplication operators for the training-data pipeline: exact,
-MinHash+LSH, SimHash, and n-gram Jaccard.
+MinHash+LSH, SimHash, n-gram Jaccard, containment and winnowing.
 
 Scale design (the point of each choice):
 
@@ -13,9 +13,17 @@ Scale design (the point of each choice):
 - **SimHash** gives a single 32-bit fingerprint; near-dups differ in
   few bits. Bucketing on bit-masked prefixes turns Hamming search into
   equality joins.
-- Hash functions are Spark's deterministic builtins (xxhash64 for the
-  production paths, md5 for the DuckDB-reproducible oracle twins) —
-  runs are reproducible; no randomness at runtime.
+
+One pipeline per family; the hash lane is its only fork. ``hasher``
+picks the lane wherever a family has two: ``"md5"`` keeps shingles as
+gram strings and hashes with md5, so every step is reproducible in
+DuckDB and the registered queries on it are oracle-checked;
+``"xxhash64"`` hashes word tuples to 8-byte longs, Spark-only and
+several times cheaper per gram. Everything else — shingle table,
+candidate generation, verification — is the same code on both lanes,
+so the oracle-checked md5 queries certify the code the xxhash64 lane
+runs. Hashes are Spark's deterministic builtins: runs are
+reproducible, with no randomness at runtime.
 
 Everything is DataFrame-native (arrays + lambda expressions); no Python
 UDFs anywhere.
@@ -23,14 +31,41 @@ UDFs anywhere.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window, functions as F
+from pyspark.sql import Column, DataFrame, Window, functions as F
+from pyspark.sql.types import StringType
 
 from map_reduce_mongodb_spark.cache import tracked_persist
 from map_reduce_mongodb_spark.functions.text import (
     fingerprint,
     hashed_word_shingles,
+    sliding,
+    word_ngrams,
     word_shingles,
+    words,
 )
+
+
+def _hashed(hasher: str) -> bool:
+    """True on the xxhash64 lane, False on the md5 lane."""
+    if hasher not in ("md5", "xxhash64"):
+        raise ValueError(f"unknown hasher: {hasher!r}")
+    return hasher == "xxhash64"
+
+
+def _shingle_table(df: DataFrame, text_col: str, id_col: str,
+                   shingle_n: int, hasher: str = "md5",
+                   extra: tuple[Column, ...] = ()) -> DataFrame:
+    """``(id, sh, *extra)``: each document's DISTINCT word-shingle set,
+    documents without a shingle dropped — the table every
+    set-similarity operator here starts from. ``sh`` holds gram
+    strings on the md5 lane and xxhash64 grams on the xxhash64 lane
+    (``hashed_word_shingles``: no gram string is ever built, and joins
+    move 8-byte keys)."""
+    shingles = hashed_word_shingles if _hashed(hasher) else word_shingles
+    return (df.select(F.col(id_col),
+                      shingles(F.col(text_col), shingle_n).alias("sh"),
+                      *extra)
+            .filter(F.size("sh") > 0))
 
 
 def exact_dedup_groups(df: DataFrame, text_col: str = "text",
@@ -61,24 +96,27 @@ def exact_dedup(df: DataFrame, text_col: str = "text",
     return survivors
 
 
-def minhash_signatures(df: DataFrame, text_col: str = "text",
-                       id_col: str = "doc_id", num_hashes: int = 16,
-                       shingle_n: int = 3) -> DataFrame:
-    """Per-doc MinHash signature over xxhash64 lanes: each 64-bit
-    digest funds TWO 32-bit hash functions (sig[2i] = min of the high
-    halves of xxhash64(shingle, i), sig[2i+1] = min of the low halves)
-    — num_hashes lanes cost num_hashes/2 hash calls per shingle, the
-    same lane-economy trick as the md5 oracle twin (4 lanes per
-    digest). Narrow (no shuffle); one pass per row.
+def minhash_index(df: DataFrame, text_col: str = "text",
+                  id_col: str = "doc_id", num_hashes: int = 16,
+                  shingle_n: int = 3,
+                  hasher: str = "xxhash64") -> DataFrame:
+    """The MinHash index: one ``(id, sh, sig)`` row per document with a
+    shingle — its distinct shingle set (what verification scores) and
+    its ``num_hashes`` signature lanes (what banding buckets). Narrow,
+    one pass per row. Materialize it once (``tracked_persist``, or
+    ``cache.shared_parquet`` across queries); :func:`minhash_pairs`,
+    :func:`minhash_incremental_pairs` and :func:`minhash_estimate` all
+    take it.
 
-    Shingles are PRE-HASHED longs (``hashed_word_shingles`` — no gram
-    string ever concatenated, the dominant cost of the string
-    pipeline), so every downstream step — lane mins, banding,
-    true-Jaccard verification via array_intersect — runs over 8-byte
-    keys. This whole operator family is Spark-specific by design
-    (rows-only driver check; the md5 pipeline is the oracle-checked
-    twin), so hashed shingle identity (collisions ~2⁻⁶⁴) is the right
-    trade.
+    Each per-shingle digest funds several 32-bit lanes:
+
+    - ``xxhash64``: sig[2i] / sig[2i+1] = min over shingles of the
+      high / low 32 bits of xxhash64(shingle, i) — 16 lanes cost 8
+      hash calls per shingle.
+    - ``md5``: sig[4i+j] = min over shingles of hex digits
+      [8j+1, 8j+8] of md5(shingle || '#i') (lexicographic min of
+      fixed-width hex == numeric min) — 16 lanes cost 4 md5 calls per
+      shingle, and the lanes are reproducible in DuckDB.
 
     Expression hygiene (matters ×100 in wall-clock): the shingle array
     — and then each per-seed digest array — is materialized as a
@@ -87,47 +125,71 @@ def minhash_signatures(df: DataFrame, text_col: str = "text",
     whole definition into every fold — measured 25× slowdown at sf0.1
     before this split (and re-hashing per lane without the digest
     split)."""
-    if num_hashes % 2 != 0:  # not assert: stripped under python -O,
-        # which would silently drop a lane (num_hashes//2 digests)
-        raise ValueError("num_hashes must be even: xxhash64 lanes "
-                         f"come in pairs (got {num_hashes})")
-    base = (
-        df.select(F.col(id_col),
-                  hashed_word_shingles(F.col(text_col), shingle_n)
-                  .alias("shingles"))
-        .filter(F.size("shingles") > 0)
-    )
+    hashed = _hashed(hasher)
+    per_digest = 2 if hashed else 4
+    if num_hashes % per_digest != 0:  # not assert: stripped under -O,
+        # which would silently drop lanes
+        raise ValueError(f"num_hashes must be a multiple of {per_digest} "
+                         f"on the {hasher} lane (got {num_hashes})")
+    n_digests = num_hashes // per_digest
 
-    def _digest(i: int):  # closure factory: unary lambda (see NOTES)
-        seed = F.lit(i)
-        return F.transform(F.col("shingles"),
-                           lambda s: F.xxhash64(s, seed))
+    # NB: the transform lambdas MUST be unary. A two-parameter lambda
+    # (e.g. `lambda g, i=i: ...`) is treated by PySpark as the
+    # (element, index) form and the array INDEX silently overrides the
+    # default — the closure factories below bind the loop variable
+    # without adding a parameter.
+    def _digest(i: int) -> Column:
+        if hashed:
+            seed = F.lit(i)
+            return F.transform(F.col("sh"), lambda s: F.xxhash64(s, seed))
+        suffix = F.lit(f"#{i}")
+        return F.transform(F.col("sh"),
+                           lambda g: F.md5(F.concat(g, suffix)))
 
-    hashed = base.select(
-        F.col(id_col), F.col("shingles"),
-        *[_digest(i).alias(f"h{i}") for i in range(num_hashes // 2)])
-    lanes = []
-    for i in range(num_hashes // 2):
+    def _lane(i: int, j: int) -> Column:
         h = F.col(f"h{i}")
-        lanes.append(F.array_min(F.transform(
-            h, lambda x: F.shiftrightunsigned(x, 32))))
-        lanes.append(F.array_min(F.transform(
-            h, lambda x: x.bitwiseAND(F.lit(0xFFFFFFFF)))))
-    return hashed.select(F.col(id_col), F.col("shingles"),
-                         F.array(*lanes).alias("sig"))
+        if not hashed:
+            pos = 8 * j + 1
+            return F.array_min(F.transform(h, lambda x: F.substring(x, pos, 8)))
+        if j == 0:
+            return F.array_min(F.transform(
+                h, lambda x: F.shiftrightunsigned(x, 32)))
+        return F.array_min(F.transform(
+            h, lambda x: x.bitwiseAND(F.lit(0xFFFFFFFF))))
+
+    digests = _shingle_table(df, text_col, id_col, shingle_n, hasher).select(
+        F.col(id_col), F.col("sh"),
+        *[_digest(i).alias(f"h{i}") for i in range(n_digests)])
+    return digests.select(
+        F.col(id_col), F.col("sh"),
+        F.array(*[_lane(i, j) for i in range(n_digests)
+                  for j in range(per_digest)]).alias("sig"))
 
 
-def _banded(sigs: DataFrame, id_col: str, num_hashes: int,
-            bands: int) -> DataFrame:
+def _band_buckets(index: DataFrame, id_col: str, num_hashes: int,
+                  bands: int) -> DataFrame:
+    """``(id, band, bucket)``: one LSH bucket per band, a hash of the
+    band's slice of the signature — ``F.hash`` of the lanes on the
+    xxhash64 lane, md5 of the concatenated hex lanes on the md5 lane
+    (read off the index's lane type, so a consumer cannot disagree
+    with the index it is given)."""
     rows_per_band = num_hashes // bands
-    return sigs.select(
+    md5_lanes = isinstance(index.schema["sig"].dataType.elementType,
+                           StringType)
+
+    def _bucket(b: int) -> Column:
+        lanes = [F.element_at("sig", b * rows_per_band + r + 1)
+                 for r in range(rows_per_band)]
+        # concat_ws, not concat: the same string for non-null lanes,
+        # but never null, so Catalyst infers no extra isnotnull filter
+        # and both lanes keep one plan
+        return (F.md5(F.concat_ws("", *lanes)) if md5_lanes
+                else F.hash(*lanes))
+
+    return index.select(
         F.col(id_col),
         F.explode(F.array(*[
-            F.struct(
-                F.lit(b).alias("band"),
-                F.hash(*[F.element_at("sig", b * rows_per_band + r + 1)
-                         for r in range(rows_per_band)]).alias("bucket"),
-            )
+            F.struct(F.lit(b).alias("band"), _bucket(b).alias("bucket"))
             for b in range(bands)
         ])).alias("bb"),
     ).select(id_col, "bb.band", "bb.bucket")
@@ -159,13 +221,13 @@ def _candidates_from_banded(banded: DataFrame, id_col: str,
                .agg(F.count(F.lit(1)).alias("_n"))
                .filter(F.col("_n") > max_bucket_size)
                .select("band", "bucket"))
-        # PRECONDITION: band (a literal) and bucket (F.hash) are
-        # non-null today, which is what makes this anti-join on the
-        # HOT list equivalent to the old semi-join on the OK list —
-        # left_anti KEEPS null-keyed rows where left_semi dropped
-        # them, so a future banding change that can emit NULL buckets
-        # would silently bypass the cap. The isNotNull guard pins the
-        # old semantics either way (ADVICE r6).
+        # PRECONDITION: band (a literal) and bucket (F.hash, or md5 of
+        # concat_ws) are non-null today, which is what makes this
+        # anti-join on the HOT list equivalent to the old semi-join on
+        # the OK list — left_anti KEEPS null-keyed rows where left_semi
+        # dropped them, so a future banding change that can emit NULL
+        # buckets would silently bypass the cap. The isNotNull guard
+        # pins the old semantics either way.
         banded = (banded.where(F.col("bucket").isNotNull())
                   .join(F.broadcast(hot), ["band", "bucket"],
                         "left_anti"))
@@ -180,30 +242,41 @@ def _candidates_from_banded(banded: DataFrame, id_col: str,
     )
 
 
+def minhash_pairs(index: DataFrame, id_col: str = "doc_id",
+                  threshold: float = 0.7, num_hashes: int = 16,
+                  bands: int = 4,
+                  max_bucket_size: int | None = None) -> DataFrame:
+    """LSH candidates from a :func:`minhash_index` verified by TRUE
+    shingle Jaccard ≥ threshold — only candidate pairs are verified
+    (the scale win vs all-pairs). ``max_bucket_size``: optional
+    hot-bucket cap (the corpus-scale skew defense — see
+    _candidates_from_banded)."""
+    cands = _candidates_from_banded(
+        _band_buckets(index, id_col, num_hashes, bands), id_col,
+        max_bucket_size)
+    return _verify_jaccard(cands, index, id_col, threshold)
+
+
 def minhash_dedup_pairs(df: DataFrame, text_col: str = "text",
                         id_col: str = "doc_id", threshold: float = 0.7,
                         num_hashes: int = 16, bands: int = 4,
                         shingle_n: int = 3,
-                        max_bucket_size: int | None = None) -> DataFrame:
-    """LSH candidates verified by TRUE shingle Jaccard ≥ threshold.
-    Only candidate pairs are verified (the scale win vs all-pairs).
-    One persisted signature pass feeds banding AND verification.
-    ``max_bucket_size``: optional hot-bucket cap (the corpus-scale
-    skew defense — see _candidates_from_banded)."""
-    sigs = tracked_persist(minhash_signatures(df, text_col, id_col,
-                                              num_hashes, shingle_n))
-    cands = _candidates_from_banded(
-        _banded(sigs, id_col, num_hashes, bands), id_col,
-        max_bucket_size)
-    return _verify_jaccard(cands, sigs, id_col, threshold,
-                           sh_col="shingles")
+                        max_bucket_size: int | None = None,
+                        hasher: str = "xxhash64") -> DataFrame:
+    """MinHash+LSH near-dup pairs of ``df``: one persisted
+    :func:`minhash_index` pass feeds banding AND verification
+    (:func:`minhash_pairs`)."""
+    index = tracked_persist(minhash_index(df, text_col, id_col, num_hashes,
+                                          shingle_n, hasher))
+    return minhash_pairs(index, id_col, threshold, num_hashes, bands,
+                         max_bucket_size)
 
 
 def ngram_jaccard_pairs(df: DataFrame, text_col: str = "text",
                         id_col: str = "doc_id", threshold: float = 0.5,
                         shingle_n: int = 3,
                         block_col: str | None = "lang",
-                        hash_tokens: bool = False) -> DataFrame:
+                        hasher: str = "md5") -> DataFrame:
     """EXACT n-gram Jaccard pairs (within blocks, default same lang) via
     the inverted-index algorithm — the scalable exact formulation:
 
@@ -222,27 +295,20 @@ def ngram_jaccard_pairs(df: DataFrame, text_col: str = "text",
     Pairs with J ≥ threshold > 0 always share a shingle, so the result
     is exactly the brute-force answer.
 
-    ``hash_tokens``: the Spark-only fast twin — shingles are hashed
-    DIRECTLY from their word tuples (``hashed_word_shingles``:
-    ``xxhash64(w1..wn)``, no per-gram string concatenation, which
-    dominates the string variant's narrow stage) and the posting join
+    ``hasher="xxhash64"``: the Spark-only lane — the posting join
     ships fixed 8-byte longs instead of ~20-30-byte grams. A 64-bit
     collision between two distinct shingles could perturb a count by 1
     (probability ~n_shingles²·2⁻⁶⁴ — negligible; equality to the
     exact string join is pinned at test scale), so the default stays
-    exact strings for the oracle-checked query."""
-    sh = (hashed_word_shingles(F.col(text_col), shingle_n) if hash_tokens
-          else word_shingles(F.col(text_col), shingle_n))
-    cols = [F.col(id_col), sh.alias("sh")]
-    if block_col:
-        cols.append(F.col(block_col).alias("blk"))
+    the md5 lane's exact strings for the oracle-checked query."""
+    blk_col = (F.col(block_col).alias("blk"),) if block_col else ()
     # persisted: FOUR consumers (tokens a/b sides, sizes sz_a/sz_b
     # sides) — unpersisted, each re-scans the corpus and re-runs the
     # shingle split (the dominant narrow-stage cost; verified 4 scans,
-    # 0 reused exchanges in the physical plan — r9 review). Same
-    # boundary the minhash/prefix siblings draw.
-    base = tracked_persist(
-        df.select(*cols).filter(F.size("sh") > 0))
+    # 0 reused exchanges in the physical plan). Same boundary the
+    # minhash/prefix siblings draw.
+    base = tracked_persist(_shingle_table(df, text_col, id_col, shingle_n,
+                                          hasher, blk_col))
     sizes = base.select(F.col(id_col), F.size("sh").alias("sz"))
     blk = ["blk"] if block_col else []
     tokens = base.select(F.col(id_col), *blk,
@@ -301,24 +367,21 @@ def containment_pairs(df: DataFrame, text_col: str = "text",
     would overstate.
 
     ``base``: precomputed ``(id_col, sh)`` distinct-shingle-set table
-    (the ``word_shingles`` extraction below, typically materialized
+    (the ``_shingle_table`` extraction below, typically materialized
     once via ``cache.shared_parquet`` when several configurations —
     production threshold, df-capped candidate pass — scan the same
     corpus: the shingle table is the piece a 100 TB pipeline writes
     to storage once). When given, ``df``/``text_col`` AND
     ``shingle_n`` are all unused — the base's own shingling (whatever
     n it was built with) defines the scores, so callers must not pass
-    a conflicting ``shingle_n`` expecting it to apply (ADVICE r8)."""
+    a conflicting ``shingle_n`` expecting it to apply."""
     if base is None:
         # persisted for the same reason as ngram_jaccard_pairs: four
         # consumers (tokens a/b, sizes sz_a/sz_b) would each re-run
         # the shingle extraction. A caller-supplied base is already a
         # materialized leaf (shared parquet) — no second boundary.
         base = tracked_persist(
-            df.select(F.col(id_col),
-                      word_shingles(F.col(text_col), shingle_n)
-                      .alias("sh"))
-            .filter(F.size("sh") > 0))
+            _shingle_table(df, text_col, id_col, shingle_n))
     tokens = base.select(F.col(id_col), F.explode("sh").alias("g"))
     if max_shingle_df is not None:
         hot = (tokens.groupBy("g")
@@ -475,9 +538,7 @@ def ngram_jaccard_pairs_prefix(df: DataFrame, text_col: str = "text",
     algorithm exactly equal to the brute-force answer (pinned in
     tests); with a cap the result is a subset, and planted near-dups
     (rare shingles by construction) survive (also pinned)."""
-    sh = word_shingles(F.col(text_col), shingle_n)
-    base = tracked_persist(
-        df.select(F.col(id_col), sh.alias("sh")).filter(F.size("sh") > 0))
+    base = tracked_persist(_shingle_table(df, text_col, id_col, shingle_n))
     tokens = base.select(F.col(id_col), F.size("sh").alias("sz"),
                          F.explode("sh").alias("g"))
     dfreq = tokens.groupBy("g").agg(F.count(F.lit(1)).alias("gdf"))
@@ -501,34 +562,7 @@ def ngram_jaccard_pairs_prefix(df: DataFrame, text_col: str = "text",
         .select("id_a", "id_b")
         .distinct()
     )
-    xa = base.select(F.col(id_col).alias("id_a"), F.col("sh").alias("sh_a"))
-    xb = base.select(F.col(id_col).alias("id_b"), F.col("sh").alias("sh_b"))
-    inter = F.size(F.array_intersect("sh_a", "sh_b")).cast("double")
-    union = (F.size("sh_a") + F.size("sh_b")).cast("double") - inter
-    return (
-        cand.join(xa, "id_a").join(xb, "id_b")
-        .withColumn("jaccard", F.round(inter / union, 6))
-        .filter(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", "jaccard")
-    )
-
-
-def simhash(df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
-            bits: int = 32, shingle_n: int = 2) -> DataFrame:
-    """SimHash fingerprint: bit j of the fingerprint is the sign of
-    sum over shingles of (bit j of murmur3(shingle) ? +1 : -1).
-    Cheapest variant (murmur3 is engine-specific, so no SQL oracle);
-    :func:`simhash_md5` is the engine-portable, oracle-checked twin."""
-    exploded = (
-        df.select(F.col(id_col), word_shingles(F.col(text_col), shingle_n)
-                  .alias("sh"))
-        .filter(F.size("sh") > 0)
-        .select(F.col(id_col),
-                F.explode(F.transform(F.col("sh"),
-                                      lambda s: F.hash(s).cast("long")))
-                .alias("h"))
-    )
-    return _simhash_from_hashes(exploded, id_col, bits)
+    return _verify_jaccard(cand, base, id_col, threshold)
 
 
 def simhash_md5(df: DataFrame, text_col: str = "text",
@@ -538,12 +572,9 @@ def simhash_md5(df: DataFrame, text_col: str = "text",
     32-bit hash is the first 8 hex chars of md5(shingle) read as an
     unsigned int — identical in Spark (``conv(_, 16, 10)``) and DuckDB
     (``CAST('0x' || _ AS BIGINT)``), so fingerprints are reproducible
-    in SQL and the whole operator is oracle-checked (the murmur3 twin
-    stays rows-only). Same agg shape as :func:`simhash`."""
+    in SQL and the whole operator is oracle-checked."""
     exploded = (
-        df.select(F.col(id_col), word_shingles(F.col(text_col), shingle_n)
-                  .alias("sh"))
-        .filter(F.size("sh") > 0)
+        _shingle_table(df, text_col, id_col, shingle_n)
         .select(F.col(id_col), F.explode("sh").alias("g"))
         .select(F.col(id_col),
                 F.conv(F.substring(F.md5("g"), 1, 8), 16, 10)
@@ -578,57 +609,36 @@ def winnow_fingerprints(df: DataFrame, text_col: str = "text",
     md5-transform definition into the lambda body and the WHOLE hash
     array re-evaluates per window position — O(len²) md5 per doc,
     measured 40s at sf0.1. Instead the min is `least()` over
-    ``arrays_zip`` of `window` shifted slices (the word_shingles
-    pattern): h is multi-referenced (CollapseProject backs off) and
-    each element is touched O(window) times. 40s → ~2s.
+    ``text.sliding`` (``arrays_zip`` of `window` shifted slices, the
+    gram builder's pattern): h is multi-referenced (CollapseProject
+    backs off) and each element is touched O(window) times. 40s → ~2s.
 
     ``hasher``: ``"md5"`` (default) is the engine-portable,
-    oracle-checked truth; ``"xxhash64"`` is the Spark-only fast twin —
-    same selection scheme over 64-bit integer hashes, ~5× cheaper per
-    gram (md5 is a cryptographic digest; winnowing only needs a
-    uniform hash). The winnowing guarantee (a shared run of
-    window+gram_n-1 words shares ≥1 selected fingerprint) holds for
-    ANY hash, so the twin is gated by the same planted-passage tests;
+    oracle-checked lane; ``"xxhash64"`` hashes each gram straight from
+    its word tuple — same selection scheme over 64-bit integer hashes,
+    ~5× cheaper per gram (md5 is a cryptographic digest; winnowing
+    only needs a uniform hash). The winnowing guarantee (a shared run
+    of window+gram_n-1 words shares ≥1 selected fingerprint) holds for
+    ANY hash, so that lane is gated by the same planted-passage tests;
     its fingerprints just aren't SQL-reproducible (rows-only check)."""
-    if hasher not in ("md5", "xxhash64"):
-        raise ValueError(f"unknown hasher: {hasher!r}")
-    w = F.split(F.trim(F.col(text_col)), r"[ \t\n\x0B\f\r]+")
-    m = F.greatest(F.size(w) - F.lit(gram_n - 1), F.lit(0))
-    zipped = F.arrays_zip(*[F.slice(w, j + 1, m) for j in range(gram_n)])
-    if hasher == "md5":
-        grams = F.transform(
-            zipped,
-            lambda s: F.concat_ws(" ", *[s[str(j)] for j in range(gram_n)]))
-        base = (
-            df.select(F.col(id_col), grams.alias("g"))
-            .filter(F.size("g") >= window)
-        )
+    hashed = _hashed(hasher)
+    grams = word_ngrams(words(F.col(text_col)), gram_n, hashed)
+    if hashed:
+        hashes = (df.select(F.col(id_col), grams.alias("h"))
+                  .filter(F.size("h") >= window))
+    else:
         # hex8 kept as STRING: lexicographic min of fixed-width
         # lowercase hex == numeric min, and skipping conv() saves a
         # pass (~30% of the hash stage).
-        hashed = base.select(
-            F.col(id_col),
-            F.transform("g", lambda x: F.substring(F.md5(x), 1, 8))
-            .alias("h"))
-    else:
-        # Fast twin: hash each gram DIRECTLY from its word tuple
-        # (xxhash64 over the struct fields) — the gram string is never
-        # concatenated, which is most of the md5 variant's narrow-stage
-        # cost; window mins become numeric least() over longs.
-        gh = F.transform(
-            zipped,
-            lambda s: F.xxhash64(*[s[str(j)] for j in range(gram_n)]))
-        hashed = (
-            df.select(F.col(id_col), gh.alias("h"))
-            .filter(F.size("h") >= window)
-        )
-    mw = F.greatest(F.size("h") - F.lit(window - 1), F.lit(0))
-    wz = F.arrays_zip(*[F.slice("h", j + 1, mw) for j in range(window)])
-    mins = hashed.select(
+        hashes = (df.select(F.col(id_col), grams.alias("g"))
+                  .filter(F.size("g") >= window)
+                  .select(F.col(id_col),
+                          F.transform("g", lambda x: F.substring(
+                              F.md5(x), 1, 8)).alias("h")))
+    mins = hashes.select(
         F.col(id_col),
-        F.array_distinct(F.transform(
-            wz, lambda s: F.least(*[s[str(j)] for j in range(window)])))
-        .alias("fps"))
+        F.array_distinct(sliding(F.col("h"), window,
+                                 lambda fs: F.least(*fs))).alias("fps"))
     return mins.select(F.col(id_col), F.explode("fps").alias("fp"))
 
 
@@ -661,7 +671,7 @@ def winnow_dup_pairs(df: DataFrame, text_col: str = "text",
     (fp, id) postings, self-join on the fingerprint itself, count hits
     per pair — only pairs that actually share a fingerprint are ever
     materialized, shuffle keyed by fp. ``hasher`` as in
-    :func:`winnow_fingerprints` (xxhash64 = Spark-only fast twin)."""
+    :func:`winnow_fingerprints`."""
     fps = tracked_persist(
         winnow_fingerprints(df, text_col, id_col, gram_n, window, hasher))
     return winnow_pair_search(fps, min_shared, id_col)
@@ -720,40 +730,62 @@ def simhash_pairs(fps: DataFrame, max_hamming: int = 3, bits: int = 32,
     )
 
 
-def minhash_dedup_pairs_md5(df: DataFrame, text_col: str = "text",
-                            id_col: str = "doc_id", threshold: float = 0.7,
-                            num_hashes: int = 16, bands: int = 4,
-                            shingle_n: int = 3,
-                            index=None) -> DataFrame:
-    """MinHash+LSH with ENGINE-PORTABLE hashes: sig[i] = min over
-    shingles of the first 8 hex chars of md5(shingle + '#' + i)
-    (lexicographic min of fixed-width hex == numeric min), band bucket
-    = md5 of the band's concatenated signature slice. Everything —
-    signatures, banding, candidate generation, Jaccard verification —
-    is reproducible in DuckDB, so unlike the murmur3 variant this LSH
-    pipeline is fully oracle-checked end-to-end. Same plan shape and
-    identical banding math as the murmur3 twin.
-
-    Hash-lane economy: md5 yields 128 bits, and a MinHash lane only
-    needs 32, so each md5 call funds FOUR hash functions —
-    sig[4i+j] = min over shingles of hex digits [8j+1, 8j+8) of
-    md5(shingle + '#' + i). 16 hash functions therefore cost 4 md5
-    calls per shingle, not 16 (measured ~4x on the md5-dominated
-    signature stage). The per-shingle digests are materialized as
-    their own projection before the 4 lane-min folds reference them —
-    same anti-inlining split as minhash_signatures (re-deriving the
-    digest array per lane re-runs md5 per reference)."""
-    base, _sigs, banded = _md5_banded(df, text_col, id_col, num_hashes,
-                                      bands, shingle_n, index)
-    cands = _candidates_from_banded(banded, id_col)
-    return _verify_jaccard(cands, base, id_col, threshold)
+def _jaccard() -> Column:
+    """Exact Jaccard of the ``sh_a``/``sh_b`` distinct-shingle arrays,
+    rounded to 6 places: union = |a|+|b|−inter, valid because the
+    shingle arrays are DISTINCT by construction (``_shingle_table``)
+    — no array_union allocation per pair."""
+    inter = F.size(F.array_intersect("sh_a", "sh_b")).cast("double")
+    union = (F.size("sh_a") + F.size("sh_b")).cast("double") - inter
+    return F.round(inter / union, 6)
 
 
-def minhash_estimate_md5(df: DataFrame, text_col: str = "text",
-                         id_col: str = "doc_id", num_hashes: int = 16,
-                         bands: int = 4, shingle_n: int = 3,
-                         index=None) -> DataFrame:
-    """Sketch-ACCURACY instrumentation for the md5 MinHash pipeline:
+def _verify_jaccard(cands: DataFrame, base: DataFrame, id_col: str,
+                    threshold: float) -> DataFrame:
+    """True-Jaccard verification of candidate pairs against the
+    ``(id, sh)`` distinct-shingle table — one definition for every
+    candidate path (MinHash on either lane, the prefix filter)."""
+    a = base.select(F.col(id_col).alias("id_a"), F.col("sh").alias("sh_a"))
+    b = base.select(F.col(id_col).alias("id_b"), F.col("sh").alias("sh_b"))
+    return (
+        cands.join(a, "id_a").join(b, "id_b")
+        .withColumn("jaccard", _jaccard())
+        .filter(F.col("jaccard") >= threshold)
+        .select("id_a", "id_b", "jaccard")
+    )
+
+
+def minhash_incremental_pairs(index: DataFrame, is_new: Column,
+                              id_col: str = "doc_id",
+                              threshold: float = 0.7,
+                              num_hashes: int = 16,
+                              bands: int = 4) -> DataFrame:
+    """Corpus-delta dedup: near-dup pairs BETWEEN an arriving batch
+    (rows where ``is_new(id)`` holds) and the standing corpus (the
+    rest) — the shape every incremental ingestion pipeline runs, where
+    re-pairing the whole corpus against itself per batch would be
+    quadratic over time. The :func:`minhash_index` and its banding are
+    shared with :func:`minhash_pairs`; only the candidate join changes:
+    banded(new) × banded(corpus) on (band, bucket), so join volume
+    scales with the BATCH, not the corpus. In production the corpus side's banded
+    signatures are a persisted table appended per batch — here both
+    sides derive from one scan.
+
+    ``is_new``: Column predicate over `id_col` (e.g.
+    ``F.col("doc_id") % 10 == 0``)."""
+    banded = _band_buckets(index, id_col, num_hashes, bands)
+    nb = banded.where(is_new).select(
+        F.col(id_col).alias("id_a"), "band", "bucket")
+    cb = banded.where(~is_new).select(
+        F.col(id_col).alias("id_b"), "band", "bucket")
+    cands = (nb.join(cb, ["band", "bucket"])
+               .select("id_a", "id_b").distinct())
+    return _verify_jaccard(cands, index, id_col, threshold)
+
+
+def minhash_estimate(index: DataFrame, id_col: str = "doc_id",
+                     num_hashes: int = 16, bands: int = 4) -> DataFrame:
+    """Sketch-ACCURACY instrumentation for a :func:`minhash_index`:
     for every LSH candidate pair, the signature-based Jaccard ESTIMATE
     (matching lanes / num_hashes — the unbiased MinHash estimator)
     next to the exact shingle Jaccard and their absolute error.
@@ -763,167 +795,28 @@ def minhash_estimate_md5(df: DataFrame, text_col: str = "text",
     error on real candidates tells you whether num_hashes is adequate
     for the threshold you filter at. Same join volume as the dedup
     pipeline itself (candidates only — never all pairs); signatures
-    ride along the existing persisted frames. Engine-portable md5
-    lanes keep every column DuckDB-reproducible."""
-    base, sigs, banded = _md5_banded(df, text_col, id_col, num_hashes,
-                                     bands, shingle_n, index)
-    cands = _candidates_from_banded(banded, id_col)
-    sa = sigs.select(F.col(id_col).alias("id_a"), *[
-        F.col(f"s{i}").alias(f"a{i}") for i in range(num_hashes)])
-    sb = sigs.select(F.col(id_col).alias("id_b"), *[
-        F.col(f"s{i}").alias(f"b{i}") for i in range(num_hashes)])
+    and shingle sets come from the one index. On an md5 index every
+    column is DuckDB-reproducible."""
+    cands = _candidates_from_banded(
+        _band_buckets(index, id_col, num_hashes, bands), id_col)
+    a = index.select(F.col(id_col).alias("id_a"), F.col("sh").alias("sh_a"),
+                     F.col("sig").alias("sig_a"))
+    b = index.select(F.col(id_col).alias("id_b"), F.col("sh").alias("sh_b"),
+                     F.col("sig").alias("sig_b"))
     matches = sum(
-        F.when(F.col(f"a{i}") == F.col(f"b{i}"), 1).otherwise(0)
+        F.when(F.element_at("sig_a", i + 1) == F.element_at("sig_b", i + 1),
+               1).otherwise(0)
         for i in range(num_hashes))
-    a = base.select(F.col(id_col).alias("id_a"), F.col("sh").alias("sh_a"))
-    b = base.select(F.col(id_col).alias("id_b"), F.col("sh").alias("sh_b"))
-    inter = F.size(F.array_intersect("sh_a", "sh_b")).cast("double")
-    union = (F.size("sh_a") + F.size("sh_b")).cast("double") - inter
     return (
-        cands.join(sa, "id_a").join(sb, "id_b")
+        cands.join(a, "id_a").join(b, "id_b")
         .withColumn("est_jaccard",
                     F.round(matches / F.lit(float(num_hashes)), 6))
-        .join(a, "id_a").join(b, "id_b")
-        .withColumn("jaccard", F.round(inter / union, 6))
+        .withColumn("jaccard", _jaccard())
         .withColumn("abs_err",
                     F.round(F.abs(F.col("est_jaccard") - F.col("jaccard")),
                             6))
         .select("id_a", "id_b", "est_jaccard", "jaccard", "abs_err")
     )
-
-
-def md5_shingle_base(df: DataFrame, text_col: str = "text",
-                     id_col: str = "doc_id",
-                     shingle_n: int = 3) -> DataFrame:
-    """(id, sh) distinct word-shingle arrays — stage 1 of the md5
-    MinHash index (exposed so callers can materialize it once and
-    share it across the pair/incremental/accuracy queries)."""
-    return (
-        df.select(F.col(id_col),
-                  word_shingles(F.col(text_col), shingle_n).alias("sh"))
-        .filter(F.size("sh") > 0)
-    )
-
-
-def md5_signatures(base: DataFrame, id_col: str = "doc_id",
-                   num_hashes: int = 16) -> DataFrame:
-    """(id, s0..s{n-1}) MinHash signature lanes from a shingle base —
-    stage 2 of the md5 index. 4 lanes per md5 digest (hash-lane
-    economy, see minhash_dedup_pairs_md5)."""
-    if num_hashes % 4 != 0:  # not assert: stripped under python -O
-        raise ValueError("num_hashes must be a multiple of 4: md5 "
-                         f"lanes come in fours (got {num_hashes})")
-
-    # NB: the transform lambdas MUST be unary. A two-parameter lambda
-    # (e.g. `lambda g, i=i: ...`) is treated by PySpark as the
-    # (element, index) form and the array INDEX silently overrides the
-    # default — the closure factories below bind the loop variable
-    # without adding a parameter.
-    def _digest(i: int):
-        suffix = F.lit(f"#{i}")
-        return F.transform(F.col("sh"),
-                           lambda g: F.md5(F.concat(g, suffix)))
-
-    def _lane(i: int, j: int):
-        pos = 8 * j + 1
-        return F.array_min(F.transform(F.col(f"m{i}"),
-                                       lambda h: F.substring(h, pos, 8)))
-
-    hashed = base.select(F.col(id_col), *[
-        _digest(i).alias(f"m{i}") for i in range(num_hashes // 4)])
-    return hashed.select(F.col(id_col), *[
-        _lane(i, j).alias(f"s{4 * i + j}")
-        for i in range(num_hashes // 4) for j in range(4)])
-
-
-def md5_banded_from_sigs(sigs: DataFrame, id_col: str = "doc_id",
-                         num_hashes: int = 16,
-                         bands: int = 4) -> DataFrame:
-    """(id, band, bucket) LSH band buckets from signature lanes —
-    stage 3 of the md5 index (narrow projection; cheap to re-derive
-    from a materialized signature table)."""
-    rows_per_band = num_hashes // bands
-    band_structs = [
-        F.struct(
-            F.lit(b).alias("band"),
-            F.md5(F.concat(*[F.col(f"s{b * rows_per_band + r}")
-                             for r in range(rows_per_band)])).alias("bucket"),
-        )
-        for b in range(bands)
-    ]
-    return sigs.select(
-        F.col(id_col), F.explode(F.array(*band_structs)).alias("bb")
-    ).select(id_col, "bb.band", "bb.bucket")
-
-
-def _md5_banded(df: DataFrame, text_col: str, id_col: str,
-                num_hashes: int, bands: int, shingle_n: int,
-                index: tuple[DataFrame, DataFrame, DataFrame] | None = None,
-                ) -> tuple[DataFrame, DataFrame, DataFrame]:
-    """Md5 MinHash pipeline: (persisted (id, shingles) base, persisted
-    (id, s0..s{n-1}) signatures, (id, band, bucket) banded signatures).
-    ``index``: a prebuilt (base, sigs, banded) triple (e.g. shared
-    materializations) returned as-is — callers sharing the index skip
-    the per-query rebuild AND the per-query persists."""
-    if index is not None:
-        return index
-    base = tracked_persist(md5_shingle_base(df, text_col, id_col,
-                                            shingle_n))
-    sigs = tracked_persist(md5_signatures(base, id_col, num_hashes))
-    banded = md5_banded_from_sigs(sigs, id_col, num_hashes, bands)
-    return base, sigs, banded
-
-
-def _verify_jaccard(cands: DataFrame, base: DataFrame, id_col: str,
-                    threshold: float, sh_col: str = "sh") -> DataFrame:
-    """True-Jaccard verification of candidate pairs against the
-    distinct-shingle-set table. ONE definition for every candidate
-    path (md5 twins AND the xxhash64 lanes — r9 review folded
-    minhash_dedup_pairs' inline copy in here): union = |a|+|b|−inter,
-    valid because the shingle arrays are DISTINCT by construction
-    (word_shingles / hashed_word_shingles default distinct=True) — no
-    array_union allocation per pair."""
-    a = base.select(F.col(id_col).alias("id_a"),
-                    F.col(sh_col).alias("sh_a"))
-    b = base.select(F.col(id_col).alias("id_b"),
-                    F.col(sh_col).alias("sh_b"))
-    inter = F.size(F.array_intersect("sh_a", "sh_b")).cast("double")
-    union = (F.size("sh_a") + F.size("sh_b")).cast("double") - inter
-    return (
-        cands.join(a, "id_a").join(b, "id_b")
-        .withColumn("jaccard", F.round(inter / union, 6))
-        .filter(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", "jaccard")
-    )
-
-
-def minhash_dedup_pairs_md5_incremental(
-        df: DataFrame, is_new, text_col: str = "text",
-        id_col: str = "doc_id", threshold: float = 0.7,
-        num_hashes: int = 16, bands: int = 4,
-        shingle_n: int = 3, index=None) -> DataFrame:
-    """Corpus-delta dedup: near-dup pairs BETWEEN an arriving batch
-    (rows where ``is_new(id)`` holds) and the standing corpus (the
-    rest) — the shape every incremental ingestion pipeline runs, where
-    re-pairing the whole corpus against itself per batch would be
-    quadratic over time. Signatures/banding are shared with the
-    self-join variant; only the candidate join changes: banded(new) ×
-    banded(corpus) on (band, bucket), so join volume scales with the
-    BATCH, not the corpus. In production the corpus side's banded
-    signatures are a persisted table appended per batch — here both
-    sides derive from one scan.
-
-    ``is_new``: Column predicate over `id_col` (e.g.
-    ``F.col("doc_id") % 10 == 0``)."""
-    base, _sigs, banded = _md5_banded(df, text_col, id_col, num_hashes,
-                                      bands, shingle_n, index)
-    nb = banded.where(is_new).select(
-        F.col(id_col).alias("id_a"), "band", "bucket")
-    cb = banded.where(~is_new).select(
-        F.col(id_col).alias("id_b"), "band", "bucket")
-    cands = (nb.join(cb, ["band", "bucket"])
-               .select("id_a", "id_b").distinct())
-    return _verify_jaccard(cands, base, id_col, threshold)
 
 
 def shared_token_runs(df: DataFrame, text_col: str = "text",
@@ -960,18 +853,13 @@ def shared_token_runs(df: DataFrame, text_col: str = "text",
     self-join; the islands window shuffles only matched seeds (zero
     for unrelated documents). At 100 TB the gram key would be
     xxhash64(gram) instead of the string (8-byte shuffle keys; the
-    md5-vs-xxhash64 twin pattern proves that swap exact elsewhere in
-    this module). Chunk-aligned `dup_passages` misses runs that
+    md5/xxhash64 lanes prove that swap exact elsewhere in this
+    module). Chunk-aligned `dup_passages` misses runs that
     straddle chunk boundaries; this sees every alignment."""
-    ws = F.split(F.trim(F.col(text_col)), r"[ \t\n\x0B\f\r]+")
-    base = (df.select(F.col(id_col).alias("id"), ws.alias("ws"))
+    base = (df.select(F.col(id_col).alias("id"),
+                      words(F.col(text_col)).alias("ws"))
             .filter(F.size("ws") >= gram_n))
-    m = F.size("ws") - F.lit(gram_n - 1)
-    zipped = F.arrays_zip(*[F.slice("ws", j + 1, m)
-                            for j in range(gram_n)])
-    grams = F.transform(
-        zipped,
-        lambda s: F.concat_ws(" ", *[s[str(j)] for j in range(gram_n)]))
+    grams = word_ngrams(F.col("ws"), gram_n)
     posted = (base.select("id", F.posexplode(grams).alias("p0", "gram"))
               .select("id", (F.col("p0") + 1).alias("pos"), "gram"))
     # tracked_persist: the self-join consumes the capped postings

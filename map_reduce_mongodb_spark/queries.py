@@ -1423,8 +1423,8 @@ def q_minhash_dedup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     the scale path for near-dup dedup (only bucket-cohabitant pairs
     are verified; shingles and signatures are 8-byte xxhash64 lanes
     end-to-end). Rows-only driver check; recall vs the exact baseline
-    is asserted in tests/test_dedup.py; the md5 pipeline
-    (minhash_lsh_md5) is the oracle-checked twin."""
+    is asserted in tests/test_dedup.py; `minhash_lsh_md5` runs the
+    same pipeline on the md5 lane and is oracle-checked."""
     from map_reduce_mongodb_spark.operators.dedup import minhash_dedup_pairs
     return minhash_dedup_pairs(table(spark, "documents", sf_dir),
                                threshold=0.7)
@@ -1484,9 +1484,7 @@ def _simhash_fps_md5(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_simhash_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     """32-bit SimHash per document (bigram shingles): near-dups land at
     small Hamming distance. md5-derived shingle hashes make the whole
-    fingerprint reproducible in DuckDB — fully oracle-checked (the
-    cheaper murmur3 twin remains available as operators/dedup.py:
-    simhash)."""
+    fingerprint reproducible in DuckDB — fully oracle-checked."""
     return _simhash_fps_md5(spark, sf_dir)
 
 
@@ -1585,14 +1583,14 @@ def q_winnow_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
                               min_shared=3)
 
 
-# Spark-only fast twins of the md5-bound dedup tail. md5 keeps those
-# queries SQL-reproducible (the whole point of the oracle-checked
-# variants), but it is a cryptographic digest where the algorithm only
-# needs a uniform hash — xxhash64 runs the same selection/join shapes
-# ~5× cheaper. Rows-only driver check by design (xxhash64 is
-# Spark-specific); correctness is gated in tests/test_dedup.py: the
-# ngram twin must EQUAL the exact string-join answer, the winnow twins
-# must find the planted passage copies.
+# The same dedup operators on their xxhash64 lane (``hasher=``). md5
+# keeps the queries above SQL-reproducible (the whole point of the
+# oracle-checked lane), but it is a cryptographic digest where the
+# algorithm only needs a uniform hash — xxhash64 runs the same
+# selection/join code ~5× cheaper. No oracle by design (xxhash64 is
+# Spark-specific); correctness is gated in
+# tests/test_dedup.py: the ngram lane must EQUAL the exact string-join
+# answer, the winnow lane must find the planted passage copies.
 
 def _winnow_fps_fast(spark: SparkSession, sf_dir: str) -> DataFrame:
     """xxhash64 winnowing fingerprints over documents, materialized
@@ -1643,7 +1641,7 @@ def q_ngram_jaccard_pairs_fast(spark: SparkSession,
     from map_reduce_mongodb_spark.operators.dedup import ngram_jaccard_pairs
     return ngram_jaccard_pairs(table(spark, "documents", sf_dir),
                                threshold=0.7, shingle_n=3,
-                               block_col="lang", hash_tokens=True)
+                               block_col="lang", hasher="xxhash64")
 
 
 def _simhash_pairs_oracle(max_hamming: int = 3, bits: int = 32) -> str:
@@ -3824,32 +3822,28 @@ def q_incremental_dedup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     the batch, not the corpus². Fully oracle-checked like the
     self-join variant."""
     from map_reduce_mongodb_spark.operators.dedup import (
-        minhash_dedup_pairs_md5_incremental)
-    return minhash_dedup_pairs_md5_incremental(
-        table(spark, "documents", sf_dir),
-        is_new=F.col("doc_id") % 10 == 0, threshold=0.7,
-        index=_md5_minhash_index(spark, sf_dir))
+        minhash_incremental_pairs)
+    return minhash_incremental_pairs(
+        _md5_minhash_index(spark, sf_dir),
+        is_new=F.col("doc_id") % 10 == 0, threshold=0.7)
 
 
-def _md5_minhash_index(spark: SparkSession, sf_dir: str):
-    """The md5 MinHash index over documents — (shingle base, signature
-    lanes, band buckets) — shared by THREE registered queries
-    (`minhash_lsh_md5`, `incremental_dedup_pairs`,
-    `minhash_estimate_accuracy`). Base and signatures are materialized
-    once per process (cache.shared_parquet — the production layout: a
-    signature table is written once per corpus snapshot and every
-    dedup/calibration consumer reads it); band buckets are a narrow
-    projection re-derived from the signature table."""
+def _md5_minhash_index(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The md5-lane MinHash index over documents — ``(doc_id, sh,
+    sig)`` from ``dedup.minhash_index`` — shared by THREE registered
+    queries (`minhash_lsh_md5`, `incremental_dedup_pairs`,
+    `minhash_estimate_accuracy`) and materialized once per process
+    (cache.shared_parquet — the production layout: a signature table
+    is written once per corpus snapshot and every dedup/calibration
+    consumer reads it; band buckets are a narrow projection each
+    consumer re-derives from it)."""
     from map_reduce_mongodb_spark.cache import shared_parquet
-    from map_reduce_mongodb_spark.operators.dedup import (
-        md5_banded_from_sigs, md5_shingle_base, md5_signatures)
+    from map_reduce_mongodb_spark.operators.dedup import minhash_index
 
-    base = shared_parquet(
-        spark, f"md5_sh_base_{sf_dir}",
-        lambda: md5_shingle_base(table(spark, "documents", sf_dir)))
-    sigs = shared_parquet(
-        spark, f"md5_sigs_{sf_dir}", lambda: md5_signatures(base))
-    return base, sigs, md5_banded_from_sigs(sigs)
+    return shared_parquet(
+        spark, f"md5_minhash_{sf_dir}",
+        lambda: minhash_index(table(spark, "documents", sf_dir),
+                              hasher="md5"))
 
 
 @query("minhash_estimate_accuracy", oracle=_minhash_est_oracle())
@@ -3863,10 +3857,8 @@ def q_minhash_estimate_accuracy(spark: SparkSession,
     corpus scale. Candidate-bounded join volume (never all pairs);
     md5 lanes keep estimate AND truth DuckDB-reproducible, so the
     driver hash-checks the estimator itself."""
-    from map_reduce_mongodb_spark.operators.dedup import (
-        minhash_estimate_md5)
-    return minhash_estimate_md5(table(spark, "documents", sf_dir),
-                                index=_md5_minhash_index(spark, sf_dir))
+    from map_reduce_mongodb_spark.operators.dedup import minhash_estimate
+    return minhash_estimate(_md5_minhash_index(spark, sf_dir))
 
 
 @query("minhash_lsh_md5", oracle=_minhash_md5_oracle())
@@ -3874,12 +3866,11 @@ def q_minhash_lsh_md5(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash+LSH near-dup pairs with engine-portable md5-derived
     hashes — the FULL LSH pipeline (signatures → banding → bucket
     candidates → Jaccard verification) oracle-checked end-to-end in
-    DuckDB, closing the usual "LSH is unverifiable" gap."""
-    from map_reduce_mongodb_spark.operators.dedup import (
-        minhash_dedup_pairs_md5)
-    return minhash_dedup_pairs_md5(table(spark, "documents", sf_dir),
-                                   threshold=0.7,
-                                   index=_md5_minhash_index(spark, sf_dir))
+    DuckDB, closing the usual "LSH is unverifiable" gap. The same
+    `dedup.minhash_pairs` code as `minhash_dedup_pairs`; only the hash
+    lane differs."""
+    from map_reduce_mongodb_spark.operators.dedup import minhash_pairs
+    return minhash_pairs(_md5_minhash_index(spark, sf_dir), threshold=0.7)
 
 
 # =====================================================================
@@ -12346,7 +12337,7 @@ def q_benford_first_digit(spark: SparkSession, sf_dir: str
 # oracle of its own still traces to hash-checked evidence. Checked by
 # tests/test_registry.py.
 ROWS_ONLY_GATES: dict[str, str] = {
-    # md5 pipelines are the hash-checked twins of the xxhash64 lanes
+    # the same dedup pipeline on its md5 lane, which DuckDB hash-checks
     "winnow_fingerprints_fast": "winnow_fingerprints",
     "winnow_dup_pairs_fast": "winnow_dup_pairs",
     "ngram_jaccard_pairs_fast": "ngram_jaccard_pairs",

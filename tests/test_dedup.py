@@ -11,7 +11,6 @@ from map_reduce_mongodb_spark.operators.dedup import (
     exact_dedup_groups,
     minhash_dedup_pairs,
     ngram_jaccard_pairs,
-    simhash,
     simhash_md5,
     simhash_pairs,
 )
@@ -68,9 +67,43 @@ def test_minhash_deterministic(spark):
     assert a == b
 
 
+def _node_names(plan) -> tuple:
+    """A JVM logical plan as nested (nodeName, children...) tuples."""
+    kids = plan.children()
+    return (plan.nodeName(),
+            *(_node_names(kids.apply(i)) for i in range(kids.size())))
+
+
+def test_minhash_lanes_run_one_pipeline(spark):
+    """The hash lane is MinHash's only fork: the md5 lane (the one
+    DuckDB checks) and the xxhash64 lane (the one the curation job
+    runs) build the same optimized operator tree, both find every
+    planted pair of identical texts, and they agree on the exact
+    Jaccard of every pair both find."""
+    docs = _docs(spark).select("doc_id", "text")
+    # plant verbatim copies of five documents under new ids
+    copies = (docs.orderBy("doc_id").limit(5)
+              .select((F.col("doc_id") + 100000).alias("doc_id"), "text"))
+    corpus = docs.unionByName(copies)
+    planted = {(r.doc_id - 100000, r.doc_id) for r in copies.collect()}
+    lanes = {h: minhash_dedup_pairs(corpus, threshold=0.7, hasher=h)
+             for h in ("md5", "xxhash64")}
+    trees = {h: _node_names(df._jdf.queryExecution().optimizedPlan())
+             for h, df in lanes.items()}
+    assert trees["md5"] == trees["xxhash64"]
+
+    found = {h: {(r.id_a, r.id_b): r.jaccard for r in df.collect()}
+             for h, df in lanes.items()}
+    for h, pairs in found.items():
+        assert planted <= set(pairs), (h, planted - set(pairs))
+    both = set(found["md5"]) & set(found["xxhash64"])
+    assert both > planted  # the fixture's own near-dups are found too
+    assert all(found["md5"][p] == found["xxhash64"][p] for p in both)
+
+
 def test_simhash_near_dups_have_small_hamming(spark):
     docs = _docs(spark)
-    fps = simhash(docs)
+    fps = simhash_md5(docs)
     pairs = ngram_jaccard_pairs(docs, threshold=0.7).select("id_a", "id_b")
     a = fps.select(F.col("doc_id").alias("id_a"),
                    F.col("simhash").alias("h_a"))
@@ -175,7 +208,7 @@ def test_ngram_jaccard_fast_twin_equals_exact(spark):
         docs, threshold=0.7, block_col="lang").collect()))
     fast = sorted(map(tuple, ngram_jaccard_pairs(
         docs, threshold=0.7, block_col="lang",
-        hash_tokens=True).collect()))
+        hasher="xxhash64").collect()))
     assert fast == exact
     assert exact  # fixture plants qualifying pairs
 

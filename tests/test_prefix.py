@@ -148,13 +148,13 @@ def test_cumsum_property_sweep(spark):
 
 def test_reliable_checkpoint_engages_when_dir_configured(spark):
     """Cluster fault-tolerance path: with a checkpoint dir configured
-    (production: HDFS/S3), eager_checkpoint must switch from
+    (production: HDFS/S3), cache.checkpoint_leaf must switch from
     executor-local blocks to reliable DataFrame.checkpoint — same
     frozen-sampling contract (zero range exchanges in the consumer
     plan), files written under the dir, results unchanged. The test
-    pins conf spark.graft.reliableCheckpoint=off afterwards so the
-    shared session's remaining tests keep the local path (the dir
-    cannot be unset)."""
+    clears the dir afterwards (through the JVM SparkContext; PySpark
+    has no unset) so the shared session's remaining tests keep the
+    local path."""
     import os
     import shutil
     import tempfile
@@ -178,5 +178,8 @@ def test_reliable_checkpoint_engages_when_dir_configured(spark):
         assert all(r.cum == want[r.id] for r in rows)
         assert any(os.scandir(d)), "no checkpoint files written"
     finally:
-        spark.conf.set("spark.graft.reliableCheckpoint", "off")
+        sc = spark.sparkContext
+        getattr(sc._jsc.sc(), "checkpointDir_$eq")(
+            sc._jvm.scala.Option.empty())
+        assert sc.getCheckpointDir() is None
         shutil.rmtree(d, ignore_errors=True)
