@@ -47,6 +47,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
 from pyspark.storagelevel import StorageLevel
 
+from map_reduce_mongodb_spark.io import read_parquet
+
 _LIVE: list[DataFrame] = []
 # (checkpoint_leaf result, py4j handle of its backing RDD)
 _LEAVES: list[tuple[DataFrame, object]] = []
@@ -92,11 +94,11 @@ def shared_parquet(spark: SparkSession, key: str,
     the materialization — scoped to this process: on first request the
     built DataFrame is written to a process-temp parquet; afterwards
     consumers get a plain parquet scan, immune to cache release. The
-    scan is given the built DataFrame's schema, so reading it back
-    launches no schema-inference job over the parquet footers. The
-    key must encode every input that determines the content (sf_dir,
-    thresholds). A process that runs a single query simply rebuilds:
-    correctness never depends on a hit.
+    scan is given the built DataFrame's schema (``io.read_parquet``),
+    so reading it back launches no schema-inference job over the
+    parquet footers. The key must encode every input that determines
+    the content (sf_dir, thresholds). A process that runs a single
+    query simply rebuilds: correctness never depends on a hit.
     """
     if key not in _SHARED:
         import hashlib
@@ -107,7 +109,6 @@ def shared_parquet(spark: SparkSession, key: str,
         # alone maps distinct keys like 'labels:sf0.1' / 'labels/sf0.1'
         # to the same file, and the second build would silently
         # overwrite the first key's data under every consumer
-        # (r9 review)
         fname = (re.sub(r"[^A-Za-z0-9_.-]+", "_", key)
                  + "-" + hashlib.md5(key.encode()).hexdigest()[:10])
         path = f"{_shared_dir()}/{fname}"
@@ -120,8 +121,7 @@ def shared_parquet(spark: SparkSession, key: str,
             _CURRENT_BUILD.pop()
         _BUILD_SECONDS[key] = round(time.perf_counter() - t0, 3)
         _SHARED[key] = (path, built.schema)
-    path, schema = _SHARED[key]
-    return spark.read.schema(schema).parquet(path)
+    return read_parquet(spark, *_SHARED[key])
 
 
 def shared_value(key: str, build: Callable[[], object]) -> object:
@@ -195,7 +195,7 @@ def clear_shared() -> None:
     resets the build-seconds attribution so tests asserting on
     :func:`shared_build_seconds` keys are hermetic — without this, a
     same-prefix key built earlier in the session under a different
-    corpus would satisfy (or poison) a later assertion (ADVICE r8).
+    corpus would satisfy (or poison) a later assertion.
     The metrics attribution (:func:`shared_build_metrics`) is reset for
     the same reason — the cross-corpus poisoning applies verbatim to
     cc_rounds/kcore_rounds assertions."""

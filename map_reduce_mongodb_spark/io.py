@@ -5,13 +5,19 @@ its full-collection scans (``find({})``, mongodb.js:59-67).
 In Spark the catalog is just named DataFrames / temp views over
 parquet; predicate pushdown, column pruning and partition pruning on
 these scans are Catalyst built-ins (SURVEY.md §4.1).
+
+:func:`read_parquet` is the package's one parquet read-back. It
+remembers schemas, never DataFrames: every call builds a fresh
+relation in the session it is given.
 """
 
 from __future__ import annotations
 
 import os
+import stat
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 #: Driver test tables (TESTDATA.md). One parquet file per table.
 TABLE_NAMES: tuple[str, ...] = (
@@ -42,8 +48,8 @@ def ensure_worker_imports(spark: SparkSession) -> None:
     # zip when a later process collides on pid after the package was
     # edited (routine where the entrypoint pid is stable and /tmp
     # persists) — workers would then import old code while the driver
-    # runs new code (r9 review). The zip is tiny; the rebuild is
-    # cheaper than the hazard.
+    # runs new code. The zip is tiny; the rebuild is cheaper than the
+    # hazard.
     with zipfile.ZipFile(zip_path, "w") as zf:
         for root, _dirs, files in os.walk(pkg_dir):
             for fn in files:
@@ -58,9 +64,9 @@ def ensure_worker_imports(spark: SparkSession) -> None:
 
 #: When set (to anything non-empty), every :func:`table` scan is
 #: wrapped in a schema-preserving mapInPandas that FAILS each task's
-#: first attempt — the executor-loss / task-retry invariance sweep
-#: (VERDICT r8 #4). At 100 TB on a real cluster task retry is routine;
-#: a nondeterministic recompute anywhere (an unseeded sample, a
+#: first attempt — the executor-loss / task-retry invariance sweep.
+#: At 100 TB on a real cluster task retry is routine; a
+#: nondeterministic recompute anywhere (an unseeded sample, a
 #: non-checksummed checkpoint) would be a silent wrong answer that
 #: only shows up under failure. Requires a ``local[N, maxFailures]``
 #: master (default local mode has maxFailures=1 — the injected failure
@@ -88,28 +94,36 @@ def _inject_task_faults(df: DataFrame) -> DataFrame:
     return df.mapInPandas(fail_first, df.schema)
 
 
-#: Memoized scan PLANS (never data): (session identity, path,
-#: mtime_ns, size) → analyzed base DataFrame. ``spark.read.parquet``
-#: costs ~100 ms of driver work per call (file listing + footer/schema
-#: read + analysis); the registry makes ~400 such calls per sweep, so
-#: re-deriving an identical lazy plan per query burned tens of seconds
-#: of pure driver overhead (guide §6's file-listing-cache point, one
-#: level up). The cached object is an UNEXECUTED plan — every consumer
-#: still computes from the parquet bytes — and the key's stat fields
-#: auto-invalidate when a test rewrites the file in place. Entries die
-#: with the process; a stopped session's plans are unreachable via the
-#: session key.
-#:
-#: The key is PER-SESSION (a uuid token stashed on the Python
-#: SparkSession wrapper, plus applicationId), not per-application: a
-#: DataFrame belongs to the session that created it — under an
-#: application-wide key, a plan cached by a ``spark.newSession()``
-#: clone (the streaming queries use one to pin shuffle partitions)
-#: would leak into the parent, and ``createOrReplaceTempView`` on it
-#: registers in the CLONE's catalog, breaking a later ``spark.sql``
-#: on the parent (caught by the r12 full-registry profile:
-#: ``sql_surface_cte_exists`` TABLE_OR_VIEW_NOT_FOUND).
-_SCAN_CACHE: dict[tuple[str, str, str, int, int], DataFrame] = {}
+#: Schemas of regular parquet files read without one:
+#: path -> (st_mtime_ns, st_size, schema). Inferring a schema is one
+#: Spark job over the footers (~100 ms of driver work on sf0.01
+#: ``lineitem``); a read given the schema launches none. A schema is
+#: plain data, valid for every session and thread. An in-place rewrite
+#: changes the stat, so the next read re-infers and replaces the entry.
+_SCHEMAS: dict[str, tuple[int, int, StructType]] = {}
+
+
+def read_parquet(spark: SparkSession, path: str,
+                 schema: StructType | None = None) -> DataFrame:
+    """The one parquet read-back of the package. Pass ``schema`` when
+    the caller knows it (the frame it just wrote): the read then
+    launches no schema-inference job. Without one, a regular local
+    file's inferred schema is memoized by stat; a directory or a path
+    ``os.stat`` cannot see (``hdfs://…``) is inferred on every read."""
+    if schema is None:
+        try:
+            st = os.stat(path)
+        except OSError:
+            st = None
+        if st is None or not stat.S_ISREG(st.st_mode):
+            return spark.read.parquet(path)
+        hit = _SCHEMAS.get(path)
+        if hit is None or hit[:2] != (st.st_mtime_ns, st.st_size):
+            df = spark.read.parquet(path)
+            _SCHEMAS[path] = (st.st_mtime_ns, st.st_size, df.schema)
+            return df
+        schema = hit[2]
+    return spark.read.schema(schema).parquet(path)
 
 
 def table(spark: SparkSession, name: str, sf_dir: str) -> DataFrame:
@@ -117,42 +131,7 @@ def table(spark: SparkSession, name: str, sf_dir: str) -> DataFrame:
     if name not in TABLE_NAMES:
         raise KeyError(f"unknown table {name!r}; have {TABLE_NAMES}")
     ensure_worker_imports(spark)
-    path = os.path.join(sf_dir, f"{name}.parquet")
-    try:
-        st = os.stat(path)
-        # Session identity = a uuid token stashed on the Python wrapper
-        # (ADVICE r12: the JVM toString() is class@identityHashCode,
-        # which is NOT guaranteed unique across live sessions — two
-        # newSession() clones could in principle collide and hand one
-        # session a plan bound to the other's catalog). A per-wrapper
-        # token can never collide; two wrappers of the SAME JVM session
-        # at worst duplicate a plan entry, which is harmless.
-        token = getattr(spark, "_mrms_scan_token", None)
-        if token is None:
-            import uuid
-            token = uuid.uuid4().hex
-            spark._mrms_scan_token = token
-        key = (spark.sparkContext.applicationId, token, path,
-               st.st_mtime_ns, st.st_size)
-    except Exception:
-        key = None  # non-local path (hdfs://…, OSError) or a session
-        #             that rejects attribute stashing: read uncached
-    df = _SCAN_CACHE.get(key) if key is not None else None
-    if df is None:
-        df = spark.read.parquet(path)
-        if key is not None:
-            # Evict every entry for the same (application, path) whose
-            # stat differs, under ANY wrapper token: after an in-place
-            # rewrite those plans are dead for every session, and each
-            # would otherwise pin its JVM session via the py4j
-            # reference for the process lifetime. Same-stat entries of
-            # other tokens stay live.
-            stale = [k for k in _SCAN_CACHE
-                     if k[0] == key[0] and k[2] == key[2]
-                     and k[3:] != key[3:]]
-            for k in stale:
-                del _SCAN_CACHE[k]
-            _SCAN_CACHE[key] = df
+    df = read_parquet(spark, os.path.join(sf_dir, f"{name}.parquet"))
     if os.environ.get(FAULT_INJECT_ENV):
         df = _inject_task_faults(df)
     return df

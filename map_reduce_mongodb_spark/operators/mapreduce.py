@@ -37,6 +37,9 @@ from pathlib import Path
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql.types import StringType, StructField, StructType
+
+from map_reduce_mongodb_spark.io import read_parquet
 
 #: map_fn(doc) yields (key, value) pairs; values must be JSON-able.
 MapFn = Callable[[dict], Iterable[tuple[str, dict]]]
@@ -44,7 +47,9 @@ MapFn = Callable[[dict], Iterable[tuple[str, dict]]]
 #: required, unlike MongoDB — the full group is visible at once).
 ReduceFn = Callable[[str, list[dict]], dict]
 
-_KV_SCHEMA = "_id string, value string"
+#: Every map_reduce output, and so every ``merge_into`` snapshot.
+_KV_SCHEMA = StructType([StructField("_id", StringType()),
+                         StructField("value", StringType())])
 
 
 def map_only(df: DataFrame, map_fn: MapFn) -> DataFrame:
@@ -120,9 +125,9 @@ def map_reduce_counters(df: DataFrame, map_fn: MapFn,
     # SOME of a key's emits sums over the present ones — but a field
     # absent from EVERY emit sums to NULL, and the null-propagating
     # F.concat below would render the key's whole value as NULL (not
-    # JSON). Such a field renders as 0 instead (r9 review; the
-    # single-value passthrough divergence — the generic reducer would
-    # omit the key — is documented above).
+    # JSON). Such a field renders as 0 instead (the single-value
+    # passthrough divergence — the generic reducer would omit the
+    # key — is documented above).
     agg = mapped.groupBy("_id").agg(*[
         F.coalesce(
             F.sum(F.get_json_object("value", f"$.{f}").cast("long")),
@@ -146,7 +151,8 @@ def read_reduced_store(spark: SparkSession, store_path: str) -> DataFrame | None
     if not ptr.exists():
         return None
     version = int(ptr.read_text().strip())
-    return spark.read.parquet(str(Path(store_path) / f"v{version}"))
+    return read_parquet(spark, str(Path(store_path) / f"v{version}"),
+                        _KV_SCHEMA)
 
 
 def merge_into(store_path: str, df: DataFrame, map_fn: MapFn,
@@ -198,4 +204,4 @@ def merge_into(store_path: str, df: DataFrame, map_fn: MapFn,
                 shutil.rmtree(p, ignore_errors=True)
         except ValueError:
             continue
-    return spark.read.parquet(str(root / f"v{nxt}"))
+    return read_parquet(spark, str(root / f"v{nxt}"), merged.schema)

@@ -5,9 +5,9 @@ history": applying a batch of attribute updates must CLOSE the current
 version of each changed key (stamp ``valid_to`` = the batch's effective
 time) and APPEND a new open version, while unchanged keys pass through
 untouched. Table formats spell this as ``MERGE INTO`` (Delta/Iceberg —
-the production backend once a jar is available, tracked in NOTES); the
-engine-level semantics are a keyed outer join + union, which is what
-this implements on plain DataFrames.
+the production backend once a jar is available); the engine-level
+semantics are a keyed outer join + union, which is what this
+implements on plain DataFrames.
 
 Scale shape: one equi-join of the dimension against the update batch
 (dimensions are the SMALL side of a warehouse — broadcast the batch
@@ -21,6 +21,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from map_reduce_mongodb_spark.sinks import _replay_fold
 
 
 def scd2_apply(dim: DataFrame, updates: DataFrame, key: str,
@@ -104,58 +106,20 @@ def scd2_replay_stream(dim: DataFrame, update_batches: list[DataFrame],
 
     Each ``update_batches[i]`` (duplicate keys within one batch are
     compacted by :func:`scd2_apply` — greatest ``effective`` wins,
-    deterministic tie-break) is written as one file-source input file with
-    strictly increasing mtimes; ``maxFilesPerTrigger=1`` then yields
-    exactly one micro-batch per input batch, oldest first (the file
-    source orders by modification time), so the replay is
-    deterministic. The foreachBatch sink reads the current dimension
-    snapshot, applies the SCD2 merge, and atomically replaces the
-    snapshot — the same read-merge-write loop a table-format MERGE
+    deterministic tie-break) becomes exactly one micro-batch, oldest
+    first (:func:`sinks._replay_fold`). The foreachBatch sink reads the
+    current dimension snapshot, applies the SCD2 merge, and replaces
+    the snapshot — the same read-merge-write loop a table-format MERGE
     INTO runs per epoch, with the snapshot store standing in for the
-    Delta/Iceberg commit (jar-gated, see NOTES).
+    Delta/Iceberg commit (jar-gated). Raises ``TimeoutError`` rather
+    than return a half-folded dimension.
 
     Scale: per-epoch work is one broadcast join of the dimension
     against the micro-batch plus a three-branch union — no window, no
     driver state; the streaming engine only tracks file-source
     offsets. ``work_dir`` must be a fresh directory (input files,
     checkpoint, and dimension snapshots live under it)."""
-    import os
-
-    spark = dim.sparkSession
-    src = os.path.join(work_dir, "updates")
-    dim_path = os.path.join(work_dir, "dim")
-    dim.write.mode("overwrite").parquet(dim_path)
-
-    schema = update_batches[0].schema
-    for i, batch in enumerate(update_batches):
-        p = os.path.join(src, f"b{i:04d}")
-        batch.coalesce(1).write.parquet(p)
-        # strictly increasing mtimes pin the micro-batch order
-        for root, _dirs, files in os.walk(p):
-            for f in files:
-                os.utime(os.path.join(root, f),
-                         (1_000_000 + i, 1_000_000 + i))
-
-    def upsert(batch_df: DataFrame, _epoch: int) -> None:
-        if batch_df.isEmpty():
-            return
-        from map_reduce_mongodb_spark.cache import (
-            checkpoint_leaf, release_leaf)
-        cur = batch_df.sparkSession.read.parquet(dim_path)
-        # checkpoint cuts lineage across the overwrite of dim_path; the
-        # blocks are dead once the write lands — release them or every
-        # epoch leaks storage for the session's lifetime
-        merged = checkpoint_leaf(scd2_apply(cur, batch_df, key, attrs))
-        merged.write.mode("overwrite").parquet(dim_path)
-        release_leaf(merged)
-
-    from map_reduce_mongodb_spark.sinks import foreach_batch
-    stream = (spark.readStream.schema(schema)
-              .option("maxFilesPerTrigger", "1")
-              .option("recursiveFileLookup", "true")
-              .parquet(src))
-    q = foreach_batch(stream, upsert,
-                      checkpoint=os.path.join(work_dir, "ckpt"),
-                      query_name="scd2_replay", available_now=True)
-    q.awaitTermination(300)
-    return spark.read.parquet(dim_path)
+    return _replay_fold(
+        dim, update_batches,
+        lambda cur, batch_df: scd2_apply(cur, batch_df, key, attrs),
+        work_dir, "scd2_replay")

@@ -5,6 +5,7 @@ sorted, row-sorted data)."""
 
 from __future__ import annotations
 
+import itertools
 import json
 import math
 from collections import Counter
@@ -68,6 +69,25 @@ def canonical_rows(pdf) -> Counter:
     for row in pdf.itertuples(index=False, name=None):
         rows[json.dumps([_canon_value(v) for v in row])] += 1
     return rows
+
+
+_PROBE_GROUPS = itertools.count()
+
+
+def jobs_launched(spark, fn):
+    """Run ``fn()`` in a job group of its own; return its result and
+    the ids of the Spark jobs it launched. The listener bus is drained
+    first, so the status tracker has seen every job."""
+    sc = spark.sparkContext
+    group = f"jobs_launched_{next(_PROBE_GROUPS)}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, list(sc.statusTracker().getJobIdsForGroup(group))
 
 
 def assert_oracle_match(spark_df, ddb_con, sql, name=""):

@@ -8,7 +8,7 @@ import json
 from pyspark.sql import functions as F
 
 from map_reduce_mongodb_spark.__main__ import main
-from tests.conftest import SF_DIR
+from tests.conftest import SF_DIR, jobs_launched
 
 
 def test_cli_waterfall(spark, tmp_path):
@@ -67,23 +67,15 @@ def test_shared_parquet_materializes_once(spark):
         calls["n"] += 1
         return frame()
 
-    sc = spark.sparkContext
-
-    def call_in_group(group):
+    def call():
         """shared_parquet(key x) and the ids of the jobs it launched."""
-        sc.setJobGroup(group, group)
-        try:
-            out = shared_parquet(spark, "test_key_sf/x", build)
-        finally:
-            sc.setLocalProperty("spark.jobGroup.id", None)
-            sc.setLocalProperty("spark.job.description", None)
-        sc._jsc.sc().listenerBus().waitUntilEmpty()
-        return out, sc.statusTracker().getJobIdsForGroup(group)
+        return jobs_launched(
+            spark, lambda: shared_parquet(spark, "test_key_sf/x", build))
 
     clear_shared()
     try:
-        a, build_jobs = call_in_group("shared_parquet_build")
-        b, reread_jobs = call_in_group("shared_parquet_reread")
+        a, build_jobs = call()
+        b, reread_jobs = call()
         assert calls["n"] == 1
         assert build_jobs, "the build's write should launch a job"
         assert reread_jobs == []
@@ -94,3 +86,29 @@ def test_shared_parquet_materializes_once(spark):
         assert calls["n"] == 2
     finally:
         clear_shared()
+
+
+def test_write_stage_reads_back_without_a_job(spark, tmp_path):
+    """write_stage's reader is given the written frame's schema: the
+    re-read launches no schema-inference job (write_stage launches
+    exactly the jobs of the same write alone), and the result keeps
+    the frame's column types, nested struct and array included."""
+    from map_reduce_mongodb_spark.sinks import write_stage
+    df = spark.range(4).select(
+        F.col("id").alias("v"),
+        F.struct(F.col("id").alias("a"),
+                 F.struct((F.col("id") * 2).alias("c")).alias("b"))
+        .alias("s"),
+        F.array("id", F.lit(7)).alias("arr"))
+    path = str(tmp_path / "stage")
+
+    def write():
+        df.write.mode("overwrite").parquet(path)
+
+    write()  # warm: the timed calls below differ only by the re-read
+    _, write_jobs = jobs_launched(spark, write)
+    out, stage_jobs = jobs_launched(spark, lambda: write_stage(df, path))
+    assert write_jobs, "the write should launch a job"
+    assert len(stage_jobs) == len(write_jobs)
+    assert out.dtypes == df.dtypes
+    assert sorted(out.collect()) == sorted(df.collect())

@@ -6,6 +6,7 @@ from __future__ import annotations
 import json
 
 from map_reduce_mongodb_spark.operators.mapreduce import map_only, map_reduce
+from tests.conftest import jobs_launched
 
 
 def _docs(spark, rows):
@@ -91,7 +92,8 @@ def test_persisted_merge_into_store(spark, tmp_path):
     """Persisted out:{reduce}: two successive jobs merging into one
     parquet-backed store must equal a single job over all input, and
     the store must survive process-independent reads (version pointer).
-    Also pins snapshot pruning and store-only key passthrough."""
+    Also pins snapshot pruning, store-only key passthrough, and a
+    snapshot read that launches no schema-inference job."""
     from map_reduce_mongodb_spark.operators.mapreduce import (
         merge_into, read_reduced_store)
 
@@ -107,7 +109,9 @@ def test_persisted_merge_into_store(spark, tmp_path):
     oracle = map_reduce(_docs(spark, [(1, "a b a"), (2, "b only_in_first"),
                                       (3, "a c"), (4, "b c c")]), mr, red)
     want = {r._id: json.loads(r.value)["n"] for r in oracle.collect()}
-    snap = read_reduced_store(spark, store)
+    snap, jobs = jobs_launched(
+        spark, lambda: read_reduced_store(spark, store))
+    assert jobs == []  # the snapshot schema is known: no inference job
     got = {r._id: json.loads(r.value)["n"] for r in snap.collect()}
     assert got == want
     assert got["only_in_first"] == 1  # store-only key passed through

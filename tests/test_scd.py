@@ -3,9 +3,11 @@ increment, history is append-only (row count = dim + |updates|)."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
-from map_reduce_mongodb_spark.operators.scd import scd2_apply
+from map_reduce_mongodb_spark.operators.scd import (
+    scd2_apply, scd2_replay_stream)
 
 
 def _dim(spark):
@@ -105,3 +107,20 @@ def test_scd2_apply_duplicate_key_batch_compacts(spark):
     expect = scd2_apply(once, pre, "k", ["seg"])
     assert (out.exceptAll(expect).count() == 0
             and expect.exceptAll(out).count() == 0)
+
+
+def test_scd2_replay_raises_when_stream_times_out(spark, tmp_path,
+                                                  monkeypatch):
+    """A replay whose stream has not drained in time raises rather
+    than return a half-folded dimension."""
+    from pyspark.sql.streaming.query import StreamingQuery
+    monkeypatch.setattr(StreamingQuery, "awaitTermination",
+                        lambda self, timeout=None: False)
+    upd = spark.createDataFrame(
+        [(4, "NEW", "1998-06-01")],
+        "k long, seg string, effective_ts string") \
+        .select("k", "seg", F.col("effective_ts").cast("timestamp")
+                .alias("effective_ts"))
+    with pytest.raises(TimeoutError):
+        scd2_replay_stream(_dim(spark), [upd], "k", ["seg"],
+                           str(tmp_path / "work"))
