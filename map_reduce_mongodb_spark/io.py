@@ -13,6 +13,7 @@ relation in the session it is given.
 
 from __future__ import annotations
 
+import atexit
 import os
 import stat
 
@@ -60,6 +61,23 @@ def ensure_worker_imports(spark: SparkSession) -> None:
                 zf.write(full, rel)
     sc.addPyFile(zip_path)
     setattr(sc, flag, True)
+    # Spark serves the zip from this path for the session's lifetime;
+    # once the interpreter exits, nothing reads it.
+    if zip_path not in _SHIPPED_ZIPS:
+        _SHIPPED_ZIPS.add(zip_path)
+        atexit.register(_remove_zip, zip_path, os.getpid())
+
+
+#: Package zips this process wrote; each is deleted at interpreter exit.
+_SHIPPED_ZIPS: set[str] = set()
+
+
+def _remove_zip(path: str, owner: int) -> None:
+    if os.getpid() == owner:   # not in a forked child
+        try:
+            os.remove(path)
+        except OSError:
+            pass
 
 
 #: When set (to anything non-empty), every :func:`table` scan is
